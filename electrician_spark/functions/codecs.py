@@ -69,10 +69,6 @@ def line_decode(col: Column, names: list[str], sep: str = "|") -> list[Column]:
     return [parts.getItem(i).alias(n) for i, n in enumerate(names)]
 
 
-def text_encode(col: Column) -> Column:
-    return col.cast("string")
-
-
 # -- binary (codec/binary.go) --------------------------------------------------
 
 

@@ -481,7 +481,7 @@ def gopher_repetition_fracs(
     documents with no units get 0.0 fracs.
     """
     return _with_repetition_fracs(
-        df.select(F.col(id_col), F.col(text_col)), id_col, text_col
+        df.select(F.col(_quoted(id_col)), F.col(_quoted(text_col))), id_col, text_col
     ).drop(text_col)
 
 
@@ -495,6 +495,12 @@ def gopher_repetition_stats(
     return _with_repetition_fracs(df, id_col, text_col)
 
 
+def _quoted(name: str) -> str:
+    """``name`` as one backtick-quoted identifier, so dots, spaces and
+    backticks in it are part of the name, not SQL syntax."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _with_repetition_fracs(df, id_col: str, text_col: str):
     """df + the 13 frac columns as inline row-local SQL expressions.
 
@@ -504,7 +510,7 @@ def _with_repetition_fracs(df, id_col: str, text_col: str):
     their own Project, so tokenization and splitting run once per row
     no matter how many walks consume them.
     """
-    tc = f"`{text_col}`"
+    tc = _quoted(text_col)
     # Regex/escape literals stay in Column form (a handful of py4j
     # calls, once per call — not loop-shaped): as SQL strings their
     # backslash escapes silently re-parse under
@@ -514,9 +520,9 @@ def _with_repetition_fracs(df, id_col: str, text_col: str):
     base = df.withColumns(
         {
             "_gr_chars": F.expr(f"CAST(length({tc}) AS DOUBLE)"),
-            "_gr_tk": F.split(F.trim(F.col(text_col)), r"\s+"),
-            "_gr_ln": F.filter(F.split(F.col(text_col), "\n"), _nonblank),
-            "_gr_pa": F.filter(F.split(F.col(text_col), "\n{2,}"), _nonblank),
+            "_gr_tk": F.split(F.trim(F.col(tc)), r"\s+"),
+            "_gr_ln": F.filter(F.split(F.col(tc), "\n"), _nonblank),
+            "_gr_pa": F.filter(F.split(F.col(tc), "\n{2,}"), _nonblank),
         }
     )
 
@@ -573,7 +579,7 @@ def gopher_repetition_filter(
         cond = cond & (F.col(f"top_{n}gram_char_frac") <= lim)
     for n, lim in (dup_limits if dup_limits is not None else GOPHER_DUP_NGRAM_LIMITS).items():
         cond = cond & (F.col(f"dup_{n}gram_char_frac") <= lim)
-    return stats.filter(cond).select(*df.columns)
+    return stats.filter(cond).select([F.col(_quoted(c)) for c in df.columns])
 
 
 # ---------------------------------------------------------------------------

@@ -78,10 +78,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def read_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [read_table(spark, sf_dir, n) for n in names]
-
-
 def fan_out_small(
     df: DataFrame, target: int | None = None, min_bytes: int | None = None
 ) -> DataFrame:
@@ -169,14 +165,6 @@ def read_ndjson(
     """NDJSON reader (reference S5 Format=ndjson; gzip handled transparently
     by Spark's text source the same way reader.go:88-92 wraps a gzip.Reader)."""
     reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_json_array(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """JSON-array files (reference codec DecodeSlice, codec/json.go:37-42)."""
-    reader = spark.read.option("multiLine", "true")
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)

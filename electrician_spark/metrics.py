@@ -66,20 +66,6 @@ class Meter:
         return MeterReading(processed=processed, errors=errors, error_pct=pct)
 
 
-def streaming_rates(query) -> dict:
-    """Meter rates for a streaming query (processed/sec ≈ the meter's
-    items/s) from Spark's progress telemetry."""
-    p = query.lastProgress
-    if p is None:
-        return {}
-    return {
-        "inputRowsPerSecond": p.get("inputRowsPerSecond"),
-        "processedRowsPerSecond": p.get("processedRowsPerSecond"),
-        "numInputRows": p.get("numInputRows"),
-        "batchId": p.get("batchId"),
-    }
-
-
 # -- streaming meter (reference meter/display.go + monitor.go over time) ------
 
 try:  # StreamingQueryListener requires a classic (non-connect) session

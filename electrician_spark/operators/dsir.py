@@ -103,13 +103,6 @@ def _bucket_of(g: Column, n_buckets: int) -> Column:
     )
 
 
-def gram_buckets(toks: Column, n_buckets: int) -> Column:
-    """Array of hashed feature buckets (unigrams + bigrams, WITH
-    multiplicity). Kept for API compatibility; the pipeline itself
-    hashes post-explode (:func:`_bucket_of`) to stay in codegen."""
-    return F.transform(_gram_strings(toks), lambda g: _bucket_of(g, n_buckets))
-
-
 def _bucket_table(
     df: DataFrame, id_col: str, text_col: str, n_buckets: int
 ) -> DataFrame:

@@ -46,6 +46,8 @@ class QueryDef:
     bench: bool = False
 
 
+# Declaration order carries no meaning: ``__spark_entry__.queries()`` orders
+# the rows for the external correctness gate.
 REGISTRY: dict[str, QueryDef] = {}
 
 
@@ -6603,175 +6605,3 @@ def q_sj2(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name).orderBy("key")
-
-
-# The external correctness gate checks only the first 50 REGISTRY entries in
-# declaration order (observed: CORRECTNESS_r01 == list(REGISTRY)[:50], which
-# left 17 declared operators with no driver row). Reorder so every operator
-# family sits inside that window; round-1 driver-green variants of shapes
-# already covered by a kept sibling (extra join/set/window/date variants)
-# rotate past the cap and keep their local tools/check.py coverage.
-
-# The registry holds EXACTLY 100 queries = two disjoint 50-slot
-# windows, so the 2-round exact cover is structurally permanent: each
-# round's window is the complement of the previous round's record.
-# 100 is a deliberate cap — a 101st query would make the 2-round cover
-# arithmetically impossible (the invariant test would go red the round
-# after it was added); new queries must therefore either replace a
-# retired sibling or land in the next window alongside a policy change.
-#
-# Round-7 rotation (no query goes >1 round without a driver row).
-# r7 window = the 43 surviving queries whose latest driver row is r5
-# (absent from CORRECTNESS_r06) + the 7 NEW rows, placed first so they
-# are attested immediately. The 7 new rows are the r6 verdict's item-1/
-# 6/7 promotions — operators that were test-pinned only, now
-# oracle-backed: PQ ADC search (q_pq1), IVF-PQ (q_pq2), best-fit
-# packing (q_pk2), reproducible shard export (q_sh1), deterministic
-# epoch shuffle (q_es1), bigram Stupid-Backoff LM + the PRODUCTION
-# approxQuantile bucket path (q_lm2), and the full Gopher battery
-# (q_gq1). Each new row replaced a RETIRED redundant r5-window sibling
-# (q_a4/q_a5/q_a6/q_x5/q_sm3/q_k5/q_wf3 — rationale at each retirement
-# site and in the round-7 section header) so the two-window arithmetic
-# holds.
-# OUT (all green in r6, unchanged semantics, back in r8): precisely
-# the 50 rows of CORRECTNESS_r06 (invariant-tested as the window's
-# complement).
-# Mid-round r7 additions: queued r8 candidates landed EARLY with
-# exact oracles (not rows-only): the C4 cleaning battery
-# (q_c4_1 — RE2-portable replay), image_pixel_stats over crafted
-# solid-color PNG/GIF fixtures (q_px1 — closed-form pixel statistics),
-# resize_plan over above-max-side fixtures (q_rz1 — closed-form
-# target dims + byte-exact uniformity), video_frame_stats over
-# crafted AVI/MJPEG solid-gray fixtures (q_vf1 — DC-only JPEG frames
-# decode bit-exactly), DSIR importance resampling (q_ir1 — full
-# DuckDB value replay of the hashed-ngram models, log-weights, and
-# Gumbel top-k), and perceptual image hashing + hamming near-dup
-# (q_ph1 — closed-form DCT sign patterns of solid/half-plane
-# fixtures). Retired in exchange: q_q2/q_hg1/q_sm4/q_m1/q_r4/q_u4
-# (rationale at each site).
-# Round-8 rotation (executed): window = the 50 queries attested in r6
-# minus 10 RETIRED rows (q_t9/q_o1/q_w8/q_w9/q_f4/q_x2/q_d7/q_sm1/
-# q_n2/q_p1 — each archived in electrician_spark.retired with a
-# subsumption note, runnable via tools/check.py --archived) plus the
-# 10 NEW promotion rows (q_rb1/q_pg1/q_id1/q_bl1/q_sc1/q_fim1/q_ex1/
-# q_wd1/q_sv1/q_rs1) placed first. Every archived row keeps its exact
-# query+oracle pair, so all SURVEY-declared queries stay runnable —
-# the r7 verdict's governance item 3.
-#
-# Round-9 rotation (executed): window = the 50 rows of CORRECTNESS_r07
-# minus 16 RETIRED rows (q_t10/q_t11/q_a3/q_wf4/q_u3/q_f2/q_f3/q_k6/
-# q_vf1/q_w5/q_j4/q_e1/q_fm1/q_es1/q_pk2/q_sh1 — each archived in
-# electrician_spark.retired with a subsumption note, runnable via
-# tools/check.py --archived) plus the 16 NEW promotion rows
-# (q_wp1/q_or1/q_lb1/q_cm1/q_bq1/q_ah1/q_cml1/q_pp1/q_rl1/q_wc1/
-# q_af1/q_hx1/q_fc1/q_aq1/q_bp1/q_fo1) placed first. The r8 verdict's
-# oracle-candidate queue is now EMPTY: q_bp1 closed its final item by
-# replaying the lowest-rank-first merge loop as a recursive CTE over
-# the symbol list (the construction the queue note doubted existed).
-#
-# Round-10 rotation (executed): window = the 50 rows of CORRECTNESS_r08
-# minus 8 RETIRED rows (q_f1_string/q_sm2_hash_sample/q_p2_snr/
-# q_ss1_substring_dedup/q_t6_tagger/q_f5_json_extract/q_d1_exact_dedup/
-# q_d8_decontaminate — each archived in electrician_spark.retired with
-# a subsumption note, runnable via tools/check.py --archived) plus the
-# 8 NEW promotion rows (q_ug1/q_cb1/q_ev1/q_sa1 and the mid-round
-# q_rt1/q_sx1/q_wm1/q_lr1) placed first.
-# These close the r9 verdict's items 1 (unigram Viterbi oracle),
-# 2 (C5 breaker divert), 5 (stateful timeout eviction — BOTH stateful
-# operators: resequence flush via q_ev1 and the rate-limit bucket
-# drop via q_rt1) and 7 (suffix-array substring dedup).
-# (Round-12 rotation, executed and recorded: window = the 50 rows of
-# CORRECTNESS_r12.json — 4 new rows q_se1/q_sj1/q_pb1/q_x9 placed
-# first, retiring q_j6/q_p3/q_lm1/q_x3 to the archive. That list was
-# replaced by the r13 list below; it is recorded verbatim in
-# CORRECTNESS_r12.json and in git history.)
-#
-# (Round-13 rotation, executed and recorded: window = the 50 rows of
-# CORRECTNESS_r13.json — new row q_sj2 placed first, retiring q_j3 to
-# the archive. That list was replaced by the r14 list below; it is
-# recorded verbatim in CORRECTNESS_r13.json and in git history.)
-#
-# Round-14 rotation: window = the 50 rows of CORRECTNESS_r12 (the
-# complement of the r13 window — the invariant test enforces the
-# 2-round exact cover), minus the 3 rows RETIRED r14 (q_t3/q_t5/q_a2 —
-# archived in electrician_spark.retired; rationale at each retirement
-# site), plus the 3 NEW r14 promotion rows placed first so they are
-# driver-attested immediately: the S4 Kafka consume round-trip through
-# the in-process DSv2 broker (q_kc1 — the only §2.1 source whose
-# consume path had no CORRECTNESS entry, r13 verdict item 1), the
-# hot-key salted join (q_sk2 — r13 verdict item 2), and the
-# Aho-Corasick blocklist census (q_ac1 — r13 verdict item 6).
-_DRIVER_PRIORITY = [
-    "q_kt1_kafka_timestamp_start",
-    "q_a7_rollup_subtotals",
-    "q_ab1_threshold_abort",
-    "q_af1_audio_fingerprint",
-    "q_aj1_asof_join",
-    "q_aq1_audio_quality",
-    "q_bp1_bpe_encode",
-    "q_bq1_binary_hamming_tier",
-    "q_c4_1_c4_cleaning",
-    "q_cm1_count_min",
-    "q_cml1_chatml_render",
-    "q_d2_ngram_jaccard",
-    "q_d9_lsh_near_dup",
-    "q_ds1_distinct_sketch",
-    "q_dw1_dedupe_within_watermark",
-    "q_em1_unigram_hard_em",
-    "q_fc1_frozen_linear_scores",
-    "q_fo1_fanout_dlq",
-    "q_gq1_gopher_battery",
-    "q_hh1_heavy_hitters",
-    "q_ht1_hypertable_rollup",
-    "q_hx1_html_main_text",
-    "q_ir1_dsir_select",
-    "q_j5_anti_join",
-    "q_lb1_length_batches",
-    "q_li1_langid_model",
-    "q_lm2_bigram_buckets",
-    "q_n3_ann_ivf_kmeans",
-    "q_or1_orc_roundtrip",
-    "q_ph1_image_phash",
-    "q_pp1_preference_pairs",
-    "q_pq1_pq_adc_topk",
-    "q_pr1_table_profile",
-    "q_px1_image_pixel_stats",
-    "q_q1_grouped_quantiles",
-    "q_r2_retry_backoff",
-    "q_rj1_range_join",
-    "q_rl1_rate_limit_stateful",
-    "q_rz1_resize_media",
-    "q_sj2_interval_join_outer",
-    "q_sk1_salted_agg",
-    "q_sp1_sequence_packing",
-    "q_u2_union_distinct",
-    "q_w7_ttl_expiry",
-    "q_wc1_warc_census",
-    "q_wf2_lag_gap",
-    "q_wp1_wordpiece_encode",
-    "q_x6_pii_redaction",
-    "q_x8_curation_pipeline",
-    "q_z1_compression_roundtrip",
-]
-
-# (Round-15 rotation, executed and recorded: the list above = the r15
-# window — the 50 rows of CORRECTNESS_r13 (the complement of r14's
-# window) with the new q_kt1_kafka_timestamp_start placed first and
-# q_k3_kafka_frame_roundtrip retired to the archive. Prior windows are
-# recorded verbatim in their CORRECTNESS_r*.json files and in git
-# history.)
-
-
-def _reorder_registry() -> None:
-    unknown = set(_DRIVER_PRIORITY) - set(REGISTRY)
-    assert not unknown, (
-        f"_DRIVER_PRIORITY names not in REGISTRY (typo would silently "
-        f"rotate a query out of external verification): {sorted(unknown)}"
-    )
-    ordered = {n: REGISTRY[n] for n in _DRIVER_PRIORITY}
-    ordered.update({n: q for n, q in REGISTRY.items() if n not in ordered})
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_reorder_registry()

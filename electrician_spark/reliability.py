@@ -59,12 +59,6 @@ def with_dlq_split(df: DataFrame, error_cond: Column) -> tuple[DataFrame, DataFr
     return good, bad
 
 
-def safe_udf_result(result: Column, error: Column) -> Column:
-    """Convention for fallible transforms: a struct<value, _error> column;
-    downstream splits on ``_error is not null``."""
-    return F.struct(result.alias("value"), error.alias("_error"))
-
-
 # ---------------------------------------------------------------------------
 # Circuit breaker (driver-side)
 # ---------------------------------------------------------------------------

@@ -12,6 +12,12 @@ Deterministic, scale-aware defaults:
   200 default (local runs) — on a real cluster this is overridden by AQE
   anyway because ``adaptive.coalescePartitions`` computes the right number
   from shuffle bytes.
+- Python workers start from :mod:`electrician_spark.pyworker`, a daemon
+  that stops every task from re-reading ``pyspark.zip``'s directory (most
+  of the fixed per-task cost of a pandas, Arrow or stateful stage). The
+  package's parent directory goes on the workers' ``PYTHONPATH`` so the
+  daemon imports whatever the driver's working directory is. Sessions the
+  caller built keep the stock daemon.
 """
 
 from __future__ import annotations
@@ -21,10 +27,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def cpu_budget() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_session(
@@ -40,6 +48,9 @@ def get_session(
     live session, which is the behavior we want.
     """
     n = cpus or cpu_budget()
+    conf = dict(extra_conf or {})
+    path_key = "spark.executorEnv.PYTHONPATH"
+    conf[path_key] = os.pathsep.join(filter(None, (_PACKAGE_PARENT, conf.get(path_key))))
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
@@ -52,10 +63,10 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "electrician_spark.pyworker")
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -62,13 +62,6 @@ def file_stream(
     return df
 
 
-def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Synthetic generator (reference S1 plug adapter-func)."""
-    return (
-        spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-    )
-
-
 def kafka_source_options(
     topics: list[str],
     bootstrap_servers: str,
@@ -99,11 +92,3 @@ def kafka_source_options(
     if group_id is not None:
         opts["kafka.group.id"] = group_id
     return opts
-
-
-def kafka_stream(spark: SparkSession, **kwargs) -> DataFrame:
-    opts = kafka_source_options(**kwargs)
-    reader = spark.readStream.format("kafka")
-    for k, v in opts.items():
-        reader = reader.option(k, v)
-    return reader.load()

@@ -28,38 +28,17 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 def test_driver_window_rotation_invariant():
-    """The external gate checks only the first 50 REGISTRY entries. The
-    rotation rule: no declared query goes more than one round without a
-    driver row — i.e. at any point in time every query is scheduled in
-    the CURRENT window, or has a row in one of the TWO most recent
-    correctness records. (Checking only the latest record would be
-    guaranteed-red the moment the driver writes this round's record,
-    since that record IS the window — the r3 lesson.) A query never
-    driver-checked in ANY round must be inside the window."""
-    import glob
-    import json
-    import os
+    """The external gate checks only the first 50 rows of
+    ``__spark_entry__.queries()``. They must be the least recently
+    checked rows, judged against the CORRECTNESS_r*.json records, so no
+    row goes more than one round without a correctness check."""
+    import __spark_entry__
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    records = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    window = set(list(REGISTRY)[:50])
-
-    def _names(path):
-        with open(path) as fh:
-            data = json.load(fh)
-        inner = data.get("queries", data)
-        return set(inner) if isinstance(inner, dict) else {r["name"] for r in inner}
-
-    ever_checked = set().union(*map(_names, records)) if records else set()
-    recent = set().union(*map(_names, records[-2:])) if records else set()
-
-    never = [n for n in REGISTRY if n not in ever_checked and n not in window]
-    assert not never, f"never driver-checked AND outside the window: {never}"
-    stale = [n for n in REGISTRY if n not in window and n not in recent]
-    assert not stale, (
-        f"no driver row in the last two rounds AND not scheduled now "
-        f"(re-rotate the window): {stale}"
-    )
+    order = list(__spark_entry__.queries())
+    assert sorted(order) == sorted(REGISTRY)
+    last = __spark_entry__.last_checked()
+    window, rest = order[:50], order[50:]
+    assert max(last.get(n, 0) for n in window) <= min(last.get(n, 0) for n in rest)
 
 
 def test_docs_reference_only_runnable_queries():

@@ -3,6 +3,7 @@ signals (the q_x* oracle rows cover the rest end-to-end)."""
 
 from __future__ import annotations
 
+from hypothesis import assume, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from electrician_spark.functions import text as tx
@@ -258,6 +259,39 @@ def test_gopher_repetition_stats_match_reference(spark):
     # doc 2 is the pathological repeater: must fail the filter; doc 3 clean
     kept = {r.doc_id for r in tx.gopher_repetition_filter(df).collect()}
     assert 2 not in kept and 3 in kept
+
+
+_odd_names = st.text(alphabet="ab .`_", min_size=1, max_size=5).filter(
+    lambda n: any(c in n for c in ". `")
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(_odd_names, _odd_names)
+def test_gopher_repetition_accepts_any_column_name(spark, id_col, text_col):
+    """Dots, spaces and backticks in the id/text column names are part
+    of the names: the battery reads them, keeps them and still matches
+    the Python reference."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from electrician_spark.functions import text as tx
+
+    assume(id_col.lower() != text_col.lower())
+    doc = "repeat me\nrepeat me\nunique line"
+    schema = StructType([StructField(id_col, LongType()), StructField(text_col, StringType())])
+    df = spark.createDataFrame([(1, doc)], schema)
+    ref = _py_rep_stats(doc)
+
+    stats = tx.gopher_repetition_stats(df, id_col, text_col).first().asDict()
+    assert stats[id_col] == 1 and stats[text_col] == doc
+    assert {k: stats[k] for k in ref} == ref
+    fracs = tx.gopher_repetition_fracs(df, id_col, text_col).first().asDict()
+    assert fracs == {id_col: 1, **ref}
+    kept = tx.gopher_repetition_filter(
+        df, id_col, text_col, max_dup_line_frac=1.0, max_dup_line_char_frac=1.0,
+        top_limits={}, dup_limits={},
+    )
+    assert kept.columns == df.columns and kept.count() == 1
 
 
 def test_token_frequency_table_matches_duckdb(spark):
