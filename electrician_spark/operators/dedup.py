@@ -4,7 +4,7 @@ Five strategies, all expressed as DataFrame plans (no driver-side
 loops, no Python UDFs in the hot path):
 
 - exact:         hash-groupBy on a normalized fingerprint
-- n-gram Jaccard: shingle explode → equi-join on shingle → count/union
+- n-gram Jaccard: hashed shingles → prefix join → exact array_intersect verify
 - MinHash + LSH:  shingle → k min-hashes → band buckets → bucket join
 - SimHash:        shingle bit-vote → 64-bit signature → hamming pairs
 - embedding:      cosine over an embedding column (see similarity.py)
@@ -122,23 +122,14 @@ def _shingle_table(
 def _doc_shingle_arrays(sh: DataFrame, order: str = "lex") -> DataFrame:
     """(id, shingle array sorted under a fixed global order, size) per
     document — the compact per-doc representation every dedup family
-    derives from (prefixes = slice, signatures = transform/aggregate,
-    verify = array_intersect). One groupBy instead of one explode+shuffle
-    per derived quantity; when two branches of a plan consume the same
-    arrays (e.g. LSH signatures + exact verify), the shared groupBy
-    exchange is deduplicated by ReuseExchange, so the shingle explode
-    runs once.
+    derives from (prefixes = slice, verify = array_intersect). One
+    groupBy instead of one explode+shuffle per derived quantity.
 
-    ``order="lex"``: lexicographic. ``order="df"``: document-frequency
-    ascending (rarest first, ties lexicographic) — each shingle row
-    picks up its global df from a count window over the shingle key,
-    so the table is consumed ONCE (r14; the previous dfreq
-    aggregate + self-join consumed it twice — two corpus
-    scan→split→explode passes plus a 20M-row string-keyed join at the
-    64× growth point — and the join build/probe plus doubled explode
-    measured 1.78→1.49 s at sf0.1 and 26.7→12.0 s at 64× against this
-    form, interleaved idle medians; the window's exchange+sort by _s
-    replaces the join's exchange of both sides)."""
+    ``order="lex"``: ascending shingle value. ``order="df"``:
+    document-frequency ascending (rarest first, ties by shingle value) —
+    each shingle row picks up its global df from a count window over the
+    shingle key, so the shingle table is consumed once (an aggregate +
+    self-join would scan, split and explode the corpus twice)."""
     if order == "lex":
         return sh.groupBy("_id").agg(
             F.array_sort(F.collect_list("_s")).alias("_arr"), F.count("*").alias("_sz")
@@ -197,21 +188,26 @@ def ngram_jaccard_pairs(
     array_intersect. Same output as the naive full shingle self-join,
     but the join touches a ~(1-t) fraction of shingle rows.
 
+    Shingles are hashed to 64-bit ``xxhash64`` longs right after the
+    explode, so the df window, the per-document arrays, the prefix join
+    and the verify all move 8-byte keys instead of n-gram strings. The
+    result is exact unless two distinct shingles collide: with S
+    distinct shingles the expected number of colliding pairs is about
+    S²/2⁶⁵ (~3·10⁻⁶ at S = 10⁷), and a collision can only perturb the
+    Jaccard of pairs that touch a document holding one of the two
+    shingles.
+
     ``prefix_order``:
-    - ``"df"`` (default): document-frequency ascending — costs two
-      extra shuffles (df count + per-doc rank) but prefixes hold the
-      globally rarest shingles, so far fewer candidates reach the
-      exact-verify stage (measured ~2× fewer at sf0.1; the gap widens
-      on skewed corpora where boilerplate shingles are hot).
-    - ``"lex"``: lexicographic — the per-doc sorted shingle array
-      already exists, so the prefix is a plain ``slice`` and candidate
-      generation adds zero shuffles beyond the one groupBy. Use when
-      shuffle count matters more than candidate count (very wide
-      clusters, cheap verify). ``max_df`` caps hot shingles in either
+    - ``"df"`` (default): document-frequency ascending — one extra
+      window exchange, but prefixes hold the globally rarest shingles,
+      so far fewer candidates reach the exact-verify stage (the gap
+      widens on skewed corpora where boilerplate shingles are hot).
+    - ``"lex"``: ascending hash value — the prefix is a plain ``slice``
+      of the sorted array and candidate generation adds no shuffle
+      beyond the one groupBy. ``max_df`` caps hot shingles in either
       mode.
 
-    ``max_df`` defaults ON (100k; a silent-behavior change vs the
-    pre-r2 ``None`` default — callers needing exactness must pass
+    ``max_df`` defaults ON (100k; callers needing exactness must pass
     ``max_df=None``): prefix filtering reduces but does not eliminate
     hot-shingle skew — boilerplate/license-header shingles sit in many
     documents' prefixes at t=0.8, and one shingle present in M docs
@@ -221,46 +217,25 @@ def ngram_jaccard_pairs(
     increase — the union shrinks at least as much as the intersection),
     and borderline pairs may newly cross the threshold; treat the
     result as approximate whenever the cap fires. Below the cap it is
-    provably exact: when the corpus has ≤ max_df rows the df pass is
-    skipped entirely (no extra aggregation).
+    exact: when the corpus has ≤ max_df rows the df pass is skipped
+    entirely (no extra aggregation).
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard to 6dp.
-
-    Rejected alternative (measured r6): deriving prefixes with a
-    row_number window over (doc, global order) + candidate-only verify
-    arrays (the minhash_lsh_pairs posture) ran 1.4× SLOWER here
-    (2.9 s vs 2.1 s at sf0.1, interleaved medians) — the window's full
-    sort-exchange plus a checkpoint job costs more than the single
-    shared groupBy whose arrays already serve both the prefix slice
-    and the verify, and unlike minhash the prefix branch needs every
-    document, so there is no corpus-sized aggregation to skip.
     """
     if prefix_order not in ("lex", "df"):
         raise ValueError(f"prefix_order must be 'lex' or 'df', got {prefix_order!r}")
     sh = _shingle_table(df, id_col, text_col, n, max_df, n_docs=n_docs)
-    # The df order attaches each shingle's global df via a count window
-    # (r14) — ONE corpus scan→split→explode pass. The two earlier forms
-    # both measured worse: (a) dfreq aggregate + self-join consumed the
-    # shingle table twice (ReuseExchange can't merge the branches —
-    # their pruning differs) and at the 64× growth point the
-    # string-keyed join turned memory-bound (26.7 s vs 12.0 s for the
-    # window, interleaved idle medians; sf0.1 1.78 vs 1.49 s);
-    # (b) materializing the exploded shingle stream with a lazy
-    # localCheckpoint (r12) cost more than recompute at every scale
-    # (r13 A/B: 2.80 s vs 2.61 s at sf0.1) because the artifact is
-    # plaintext n-grams, several times the pruned parquet text column.
-    # One doc-arrays table serves BOTH the prefix extraction (slice of
-    # the globally-ordered array) and the exact verify (array_intersect
-    # is order-agnostic) — its groupBy exchange is computed once and
-    # reused across the two branches.
-    docs = _doc_shingle_arrays(sh, order=prefix_order)
+    sh = sh.select("_id", F.xxhash64("_s").alias("_s"))
+    # The per-document arrays feed three consumers (the prefix explode
+    # and both sides of the verify join); materialized once, the corpus
+    # is scanned, split and exploded once and the collect_list
+    # aggregate runs once instead of once per consumer.
+    docs = _doc_shingle_arrays(sh, order=prefix_order).localCheckpoint()
     prefix_len = F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
-    # Carry the set size through the prefix explode for the ppjoin
+    # The set size rides through the prefix explode for the ppjoin
     # length filter: J(A,B) ≥ t ⇒ t·|A| ≤ |B| ≤ |A|/t (intersection is
-    # bounded by min size, union by max). One int per prefix row buys a
-    # pre-distinct prune measured 2.7× at sf0.1 (118k → 43k candidates,
-    # same 256 verified pairs) — and the prune ratio grows with corpus
-    # size-diversity, which is exactly the 100 TB regime.
+    # bounded by min size, union by max), pruning candidates before the
+    # distinct.
     prefix = docs.select(
         "_id", "_sz", F.explode(F.slice("_arr", F.lit(1), prefix_len.cast("int"))).alias("_s")
     )
@@ -363,29 +338,18 @@ def minhash_lsh_pairs(
     Map-side-combined signatures, candidate-only verify:
     - the signature branch aggregates the shingle stream with full
       map-side combine: the shuffle carries k min-hash columns per
-      (partition, doc), not the raw token stream (the r5 plan's
-      repartition exchange shipped every (id, shingle) row — measured
-      +21% at sf0.1);
+      (partition, doc), not the raw (id, shingle) rows;
     - the verify branch first SEMI-JOINs the shingles down to documents
-      that actually appear in a candidate pair, so the collect_list
-      aggregation shuffles only the candidate docs' shingles —
-      O(candidates), not O(corpus). The r5 plan built sorted arrays for
-      every document, candidate or not.
-    The two branches each recompute the shingle pipeline rather than
-    share a materialized copy: r5–r12 kept an eager localCheckpoint of
-    the shingle table here, and the r13 A/B (idle session, interleaved,
-    collect medians) reads 2.24 s with it vs 2.04 s without at sf0.1 —
-    the block write + job barrier costs more than a second codegen'd
-    scan→split→explode. At 100 TB the sign is the same: the checkpoint
-    artifact is the exploded plaintext shingle stream, several times
-    the compressed column-pruned text column, so one write + two reads
-    of it moves more bytes than two pruned scans. The small `cand`
-    table IS still checkpointed (below) — recomputing it would run the
-    whole signature+bucket-join pipeline twice, the genuinely expensive
-    subtree. Rejected forms, measured: shared raw-row exchange (r5:
-    map-side combine lost), array_min∘transform signatures from
-    collected arrays (interpreted HOFs — 1.9× q_d2), eager shingle
-    checkpoint (above).
+      that appear in a candidate pair, so the collect_list aggregation
+      shuffles only the candidate docs' shingles — O(candidates), not
+      O(corpus).
+    The two branches each recompute the codegen'd scan→split→explode
+    rather than share a materialized shingle stream, which is several
+    times the size of the column-pruned text. The small candidate table
+    is materialized (it feeds the id semi-join and the verify join, and
+    recomputing it reruns the signature and bucket-join pipeline):
+    on the 5k-document growth corpus (4 cores) that read 2.57 s per
+    warm call against 3.19 s without, 8 of 8 interleaved pairs.
     """
     _check_banding(num_hashes, bands)
     sh = _shingle_table(df, id_col, text_col, n, None)
@@ -400,13 +364,8 @@ def minhash_lsh_pairs(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
+        .localCheckpoint()
     )
-    try:
-        # consumed twice (id semi-join + verify join) — materialize the
-        # sparse survivor set once instead of re-running bucket join.
-        cand = cand.localCheckpoint()
-    except Exception:  # noqa: BLE001
-        pass
     cand_ids = (
         cand.select(F.explode(F.array("id_a", "id_b")).alias("_id")).distinct()
     )
@@ -566,142 +525,34 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 20,
+    max_iterations: int = 30,
     local_solve_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """Cluster assignment over a near-duplicate pair graph: each node
-    gets the minimum doc id reachable from it (``rep``) — the canonical
-    document its cluster deduplicates to. Returns (node, rep) for every
-    node that appears in ``pairs`` (singletons never enter the graph).
+    gets the minimum id reachable from it (``rep``) — the canonical
+    document its cluster deduplicates to. Returns (node, rep) once for
+    every node with an edge to another node: duplicate and reversed
+    pairs count once, and self-loops are dropped, so a node whose only
+    pair is with itself is a singleton and, like every singleton, never
+    enters the graph.
 
-    Min-label propagation: every round each node takes the least of its
-    own label and its neighbors' labels; converged when no label
-    changes. Rounds needed = graph diameter, and near-dup graphs are
-    shallow (duplicates are mutual, mostly cliques), so this terminates
-    in a few rounds; ``max_iterations`` bounds adversarial chains.
-
-    Adaptive local solve: a near-dup pair graph is the *survivor* set
-    of an aggressive similarity threshold — usually orders of magnitude
-    smaller than the corpus. When the edge list is provably small
-    (≤ ``local_solve_max_edges``, known from the one count the loop
-    would run anyway), union-find on the driver replaces ~2·diameter
-    scheduled jobs with one collect — same (node, min-reachable-id)
-    output, exact. This is the AQE posture: runtime statistics pick the
-    physical strategy. Pass ``local_solve_max_edges=0`` to force the
+    The edge list is materialized once and counted. A near-dup pair
+    graph is the survivor set of a similarity threshold, usually orders
+    of magnitude smaller than the corpus, so when it holds at most
+    ``local_solve_max_edges`` edges it is collected and solved by
+    union-find on the driver: one collect instead of a few scheduled
+    jobs per round. Pass ``local_solve_max_edges=0`` to force the
     distributed path.
 
-    Scale notes (100 TB): each distributed round is one join + one
-    groupBy on the edge list — linear shuffles, no driver-side graph.
-    Labels are localCheckpoint'ed per round to truncate lineage
-    (production: ``spark.sparkContext.setCheckpointDir`` +
-    ``checkpoint()`` for executor-loss resilience). For graphs with
-    huge components, swap the propagation loop for alternating
-    large-star/small-star rounds — the same join/groupBy primitives
-    with O(log n) round bound.
-    """
-    # The pair list is usually the output of an expensive similarity
-    # pipeline — materialize it ONCE before the count that picks the
-    # strategy, so neither path recomputes the upstream plan.
-    pairs = pairs.select(id_a, id_b)
-    try:
-        pairs = pairs.localCheckpoint()
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute instead
-        pass
-    if local_solve_max_edges and pairs.count() <= local_solve_max_edges:
-        from pyspark.sql.types import StructField, StructType
-
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in pairs.collect():
-            a, b = r[0], r[1]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min so the root IS the min label of the set
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(n, find(n)) for n in parent]
-        id_type = pairs.schema[0].dataType
-        schema = StructType(
-            [StructField("node", id_type, False), StructField("rep", id_type, False)]
-        )
-        return pairs.sparkSession.createDataFrame(rows, schema=schema)
-
-    edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).unionByName(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    )
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "rep", F.col("node")
-    )
-    for _ in range(max_iterations):
-        nbr = (
-            edges.join(
-                labels.select(F.col("node").alias("dst"), F.col("rep").alias("nrep")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nrep").alias("min_nbr"))
-        )
-        proposed = labels.join(
-            nbr.select(F.col("src").alias("node"), "min_nbr"), "node", "left"
-        ).select(
-            "node",
-            F.least(F.col("rep"), F.coalesce(F.col("min_nbr"), F.col("rep"))).alias("rep"),
-            (F.col("min_nbr") < F.col("rep")).alias("_changed"),
-        )
-        try:
-            proposed = proposed.localCheckpoint()
-        except Exception:  # noqa: BLE001
-            pass
-        changed = proposed.filter(F.col("_changed")).limit(1).count()
-        labels = proposed.drop("_changed")
-        if changed == 0:
-            break
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 30,
-    freeze_min_edges: int = 10_000_000,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the huge-component path: converges in O(log n) rounds
-    regardless of graph diameter, where min-label propagation needs
-    diameter rounds (a 10M-node chain: ~24 rounds vs 10M). Each round
-    is two groupBy+join passes over the edge list — the same linear
-    shuffle primitives as propagation, no driver-side graph.
-
-    large-star: every node points its LARGER neighbors at the minimum
-    of its neighborhood (incl. itself); small-star does the same for
-    smaller-or-equal neighbors on min-oriented edges. Fixed point =
-    every component is a star rooted at its minimum id. Returns
-    (node, rep), rep = min reachable id — identical contract to
-    :func:`connected_components`.
-
-    Converged-component early exit (``freeze_min_edges``): on graphs
-    with at least that many edges, each round freezes ISOLATED stars —
-    components already in final form — out of the working edge set, so
-    later rounds shuffle only the shrinking offender subgraph (on
-    clique-heavy near-dup graphs most components settle in round 1).
-    The gate default is measurement-driven: at 1.6M edges (150k cliques
-    + long chains, local[32]) freeze showed NO wall-time benefit —
-    per-round fixed costs (job scheduling, small exchanges) dominate
-    until per-round shuffle volume is the bottleneck — so the default
-    engages only in the ≥10M-edge regime where it can matter; pass 0
-    to force freezing (equivalence-pinned either way).
+    Distributed path: alternating large-star / small-star rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond"),
+    which converge in O(log n) rounds whatever the graph's diameter.
+    Each round is two groupBy+join passes over the edge list — linear
+    shuffles, no driver-side graph. large-star points every node's
+    LARGER neighbors at the minimum of its neighborhood (itself
+    included); small-star does the same for smaller-or-equal neighbors
+    on min-oriented edges. The fixed point is a star per component,
+    rooted at its minimum id.
     """
     # Invariant: every stored edge is max→min oriented (a > b). The
     # initial normalization establishes it; each round's construction
@@ -716,37 +567,24 @@ def connected_components_star(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
+        .localCheckpoint()
     )
-    try:
-        edges = edges.localCheckpoint()
-    except Exception:  # noqa: BLE001
-        pass
+    if edges.count() <= local_solve_max_edges:
+        return _union_find_components(edges)
+
     all_nodes = edges.select(F.col("a").alias("node")).unionByName(
         edges.select(F.col("b").alias("node"))
     ).distinct()
-
-    done = None  # frozen star edges of already-converged components
-    try:  # one cheap count over the just-checkpointed edge set
-        use_freeze = edges.count() >= freeze_min_edges
-    except Exception:  # noqa: BLE001
-        use_freeze = False
-    # Loop-invariant expression construction hoisted OUT of the round
-    # loop (r16; the _minhash_aggs py4j note): unresolved Columns bind
-    # by name at analysis, so ONE set of Column objects serves every
-    # round, and the multi-expression projections/filters parse as SQL
-    # strings — one JVM round trip each instead of one per col/alias/op.
-    # Parsed trees are identical to the previous Column chains; the
-    # executed plans are unchanged (equivalence + plan pins in
-    # test_dedup/test_plans).
+    # Unresolved Columns bind by name at analysis, so one set serves
+    # every round; multi-expression projections parse as SQL strings —
+    # one JVM round trip each instead of one per col/alias/op.
     min_v = F.min("v").alias("_mn")
     agg_out = F.sum("s").alias("_out")
     agg_roles = F.count_distinct("s").alias("_roles")
     for _ in range(max_iterations):
-        # large-star over the bidirected neighbor lists. No intermediate
-        # distinct()s: duplicates produced mid-round don't change any
-        # min() and the terminal distinct removes them — each dropped
-        # distinct was a full extra exchange per round (the r5 plan ran
-        # three; this runs one).
+        # large-star over the bidirected neighbor lists. Duplicates
+        # produced mid-round change no min() and the round's one
+        # distinct removes them.
         bi = edges.selectExpr("a AS u", "b AS v").unionByName(
             edges.selectExpr("b AS u", "a AS v")
         )
@@ -759,104 +597,70 @@ def connected_components_star(
         )
         # small-star over the (already min-oriented) large-star output.
         smins = large.groupBy("u").agg(min_v)
-        small = (
+        edges = (
             large.join(smins, "u")
             .selectExpr("v AS a", "_mn AS b")
             .unionByName(smins.selectExpr("u AS a", "_mn AS b"))
             .filter("a != b")
             .distinct()
+            .localCheckpoint()
         )
-        try:
-            # EAGER again (r16, reverting the r15 lazy cut): the lazy
-            # form measured consistently WORSE on the growth corpus —
-            # interleaved at 16x, 84.5 s process-tree CPU (lazy+union
-            # census) vs 71.5 s eager, and still +5% CPU / +3% wall
-            # after the census went single-scan; at 64x lazy read
-            # 20.3 s wall vs eager 18.0. The barrier the lazy form
-            # saves is one near-free job launch per round, while its
-            # first-action materialization overlaps block persistence
-            # with the round's shuffle and re-computes whatever the
-            # fixpoint take(1) escalation re-runs. The q_pg1 lazy win
-            # (ce99ec9) does not transfer: pagerank's per-round table
-            # has ONE consumer; `small` has four.
-            small = small.localCheckpoint()
-        except Exception:  # noqa: BLE001
-            pass
-        edges = small
-        # STRUCTURAL fixpoint test, no confirm round: under the max→min
-        # orientation, an edge set is a star forest iff every source has
-        # exactly one outgoing edge and no target is itself a source —
-        # and a star forest IS the answer (rounds preserve components;
-        # a min-rooted star is invariant under both stars, which is the
-        # algorithm's only fixpoint per Kiveris et al.). One early-exit
-        # aggregate job over the just-materialized sparse edge set; the
-        # r6-interim check (count-gate + membership-flag join) still ran
-        # one FULL extra round to observe "nothing changed", ~half the
-        # loop's wall time on clique-shaped near-dup graphs.
-        # ONE scan of `small` for the role census (r16): the union-of-
-        # two-selects form read the round's edge set twice where one
-        # explode pass emits both endpoint roles — same rows into the
-        # aggregate, half the block reads (and under any future lazy
-        # checkpoint, half the first-action computes — the 16x growth
-        # probe measured the union form costing the lazy round a
-        # double materialization).
-        roles = small.selectExpr(
+        # Structural fixpoint test: under the max→min orientation an
+        # edge set is a star forest iff every source has exactly one
+        # outgoing edge and no target is itself a source — and a star
+        # forest is the answer (rounds preserve components, and a
+        # min-rooted star is invariant under both stars). One explode
+        # emits both endpoint roles, so the census reads the round's
+        # edges once.
+        roles = edges.selectExpr(
             "explode(array(named_struct('n', a, 's', 1), "
             "named_struct('n', b, 's', 0))) AS _r"
         ).selectExpr("_r.n AS n", "_r.s AS s")
-        bad = (
-            roles.groupBy("n")
-            .agg(agg_out, agg_roles)
-            .filter("_out > 1 OR _roles > 1")
-            .select("n")
-        )
-        if use_freeze:
-            try:  # bad feeds three consumers below — materialize once
-                # (lazily: isEmpty may stop at the first non-empty
-                # partition; the flag joins fill in the rest on demand)
-                bad = bad.localCheckpoint(eager=False)
-            except Exception:  # noqa: BLE001
-                pass
+        bad = roles.groupBy("n").agg(agg_out, agg_roles).filter("_out > 1 OR _roles > 1")
         if bad.isEmpty():
             break
-        if not use_freeze:
-            continue
-        # Converged-component early exit: ISOLATED stars stop
-        # participating. A root b whose sources are ALL non-bad and
-        # which is itself non-bad heads a component that is exactly
-        # {b} ∪ {its sources} with no other incident edges — nothing
-        # can re-root it (a small-star re-points a root only through
-        # an adjacent node with degree ≥ 2, which is by definition
-        # bad), so its edges are final. Per-node badness alone is NOT
-        # sufficient: a non-bad root adjacent to a bad source gets
-        # re-pointed in a later round (the small-star of that source)
-        # — the group-level max catches that. Freeze isolated stars
-        # into ``done`` and run the next round on the shrinking
-        # offender subgraph only (clique-heavy near-dup graphs settle
-        # most components in round 1, so rounds 2+ touch a fraction
-        # of the edges).
-        flagged = (
-            small.join(bad.selectExpr("n AS a", "1 AS _ba"), "a", "left")
-            .join(bad.selectExpr("n AS b", "1 AS _bb"), "b", "left")
-        )
-        root_bad = flagged.groupBy("b").agg(
-            F.expr("max(coalesce(_ba, 0))").alias("_rb")
-        )
-        # no checkpoint here: settled/active each re-run two cheap
-        # joins off the ALREADY-checkpointed small+bad (next round's
-        # checkpoint truncates the active lineage; done evaluates once)
-        flagged = flagged.join(root_bad, "b")
-        settled = flagged.filter("_bb IS NULL AND _rb = 0").select("a", "b")
-        done = settled if done is None else done.unionByName(settled)
-        edges = flagged.filter("NOT (_bb IS NULL AND _rb = 0)").select("a", "b")
-
-    if done is not None:
-        edges = done.unionByName(edges)
     # star edges point node -> root; roots map to themselves
-    reps = edges.select(F.col("a").alias("node"), F.col("b").alias("rep")).distinct()
+    reps = edges.select(F.col("a").alias("node"), F.col("b").alias("rep"))
     return all_nodes.join(reps, "node", "left").select(
         "node", F.coalesce(F.col("rep"), F.col("node")).alias("rep")
     )
+
+
+def _union_find_components(edges: DataFrame) -> DataFrame:
+    """(node, rep) for a small (a, b) edge list, solved on the driver.
+    The answer goes back as an Arrow table, which Spark plans as a local
+    relation; a list of rows would become a Python RDD that needs Python
+    workers to read."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges.collect():
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by min so the root IS the min label of the set
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    id_type = edges.schema[0].dataType
+    schema = StructType([StructField("node", id_type, False), StructField("rep", id_type, False)])
+    arrow_type = to_arrow_type(id_type)
+    table = pa.table({
+        "node": pa.array(list(parent), arrow_type),
+        "rep": pa.array([find(n) for n in parent], arrow_type),
+    })
+    return edges.sparkSession.createDataFrame(table, schema=schema)
 
 
 def canonical_docs(

@@ -908,8 +908,8 @@ def semantic_dedup(
     rows_per_block: int = 4096,
 ) -> DataFrame:
     """Deduplicated corpus under SemDeDup semantics: connect
-    :func:`semantic_pairs` into duplicate groups (large-star/small-star
-    rounds — O(log n) regardless of chain length) and keep only the
+    :func:`semantic_pairs` into duplicate groups
+    (:func:`dedup.connected_components`) and keep only the
     minimum-id member of each group. Singletons and cluster-crossing
     near-dups survive (the documented one-sided error). Anti-join on
     the drop list — the corpus never shuffles for the final cut."""
@@ -918,7 +918,7 @@ def semantic_dedup(
     pairs = semantic_pairs(
         df, threshold, k, iters, id_col, vec_col, label_col, blocks, rows_per_block
     )  # k=None auto-sizes from the corpus count (see semantic_pairs)
-    comps = dedup.connected_components_star(pairs)
+    comps = dedup.connected_components(pairs)
     drop = comps.filter(F.col("node") != F.col("rep")).select(
         F.col("node").alias(id_col)
     )

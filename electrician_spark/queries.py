@@ -1513,15 +1513,13 @@ def q_d3(spark, sf_dir):
     tags=("dedup",),
 )
 def q_d6(spark, sf_dir):
-    # Uses the large-star/small-star variant (O(log n) rounds regardless
-    # of diameter — the huge-component scale path) rather than the
-    # adaptive min-label/local-solve one, so the driver row attests the
-    # algorithm that actually runs at 100 TB; measured cost-equal at
-    # sf0.1 (3.8 s both, warm) and equivalence-pinned in test_dedup.
+    # The fixture pair graph is small, so connected_components solves it
+    # on the driver; test_dedup pins that solve equal to the distributed
+    # large-star/small-star rounds that larger graphs take.
     from electrician_spark.operators import dedup
 
     pairs = dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.8)
-    return dedup.connected_components_star(pairs).orderBy("node")
+    return dedup.connected_components(pairs).orderBy("node")
 
 
 # (q_d7_canonical_docs: RETIRED r8 -> electrician_spark.retired. cluster CC

@@ -43,10 +43,14 @@ def get_session(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    If a session already exists (e.g. the driver passed one in), its
-    config wins — Spark ignores builder conf on ``getOrCreate`` of a
-    live session, which is the behavior we want.
+    If a session is already active (e.g. the driver passed one in), it
+    is returned untouched: its config wins, and neither the conf below
+    nor the log level is applied to it (``getOrCreate`` alone would
+    write every builder option into the live session's SQL conf).
     """
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     n = cpus or cpu_budget()
     conf = dict(extra_conf or {})
     path_key = "spark.executorEnv.PYTHONPATH"

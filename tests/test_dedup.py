@@ -2,6 +2,8 @@
 values; these pin operator-level contracts)."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from electrician_spark.io import read_table
@@ -60,8 +62,8 @@ def test_max_df_guards_hot_shingles(spark):
 
 
 def test_connected_components_chain_and_cliques(spark):
-    """Min-label propagation must traverse chains (diameter > 2) and
-    keep disjoint cliques apart; singletons never enter the graph."""
+    """Components must span chains (diameter > 2) and keep disjoint
+    cliques apart; singletons never enter the graph."""
     from electrician_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -187,11 +189,69 @@ def test_prefix_and_length_filters_exact_vs_bruteforce(spark):
         assert _pairs(blocked) == _pairs(brute), order
 
 
-def test_star_components_equal_propagation_on_hard_graphs(spark):
-    """large-star/small-star must produce the identical (node, rep)
-    labeling as min-label propagation on shapes that stress each
-    algorithm: a long chain (diameter >> log n), disjoint cliques,
-    a star, and a seeded random graph with isolated pairs."""
+def _exact_jaccard_pairs(rows, n, threshold):
+    """Every (id_a < id_b, jaccard) at or above ``threshold`` by plain
+    set arithmetic over distinct word n-grams, rounded as Spark's
+    round(x, 6) does (HALF_UP on the shortest decimal form)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sets = {}
+    for i, text in rows:
+        tk = text.split()
+        sets[i] = {" ".join(tk[j:j + n]) for j in range(len(tk) - n + 1)}
+    out = set()
+    for x in sets:
+        for y in sets:
+            if x < y and sets[x] and sets[y]:
+                inter = len(sets[x] & sets[y])
+                j = inter / (len(sets[x]) + len(sets[y]) - inter)
+                j = float(Decimal(repr(j)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+                if j >= threshold:
+                    out.add((x, y, j))
+    return out
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    seed=st.integers(0, 2**31 - 1),
+    n=st.sampled_from([2, 3]),
+    threshold=st.sampled_from([0.5, 0.7, 0.8]),
+)
+def test_ngram_jaccard_pairs_equal_exact_python_jaccard(spark, seed, n, threshold):
+    """Hashed shingles, both prefix orders and the materialized arrays
+    must reproduce exact Jaccard on seeded corpora built from a small
+    vocabulary with shared boilerplate, so df ties are common and the
+    boilerplate shingles are hot."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(rng.randint(6, 30))]
+    boiler = [[rng.choice(vocab) for _ in range(rng.randint(3, 8))] for _ in range(2)]
+    rows = []
+    for _ in range(rng.randint(3, 8)):  # clusters of near-identical docs
+        base = [rng.choice(vocab) for _ in range(rng.randint(1, 25))]
+        for _ in range(rng.randint(1, 4)):
+            words = [w if rng.random() > 0.1 else rng.choice(vocab) for w in base]
+            head = rng.choice(boiler) if rng.random() < 0.7 else []
+            rows.append((len(rows), " ".join(head + words)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _exact_jaccard_pairs(rows, n, threshold)
+    for order in ("lex", "df"):
+        got = dedup.ngram_jaccard_pairs(
+            docs, n=n, threshold=threshold, max_df=None, prefix_order=order
+        )
+        assert _pairs(got) == want, order
+
+
+def _components(pairs, **kw):
+    return {(r.node, r.rep) for r in dedup.connected_components(pairs, **kw).collect()}
+
+
+def test_driver_solve_equals_distributed_components_on_hard_graphs(spark):
+    """The driver union-find and the forced large-star/small-star path
+    must produce the identical (node, rep) labeling on shapes that
+    stress the rounds: a long chain (diameter >> log n), disjoint
+    cliques, a star, and a seeded random graph with isolated pairs."""
     import random
 
     rng = random.Random(7)
@@ -203,21 +263,26 @@ def test_star_components_equal_propagation_on_hard_graphs(spark):
     edges = [(a, b) for a, b in chains + cliques + star + randoms if a != b]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
 
-    prop = {(r.node, r.rep) for r in dedup.connected_components(
-        pairs, local_solve_max_edges=0, max_iterations=200).collect()}
-    stars = {(r.node, r.rep) for r in dedup.connected_components_star(pairs).collect()}
-    assert stars == prop
-
-    # the converged-component freeze path (gated off for small graphs
-    # by default) must produce the identical labeling — this graph is
-    # the adversarial case for freezing: stars that LOOK settled in
-    # round 1 but whose roots get re-pointed by adjacent bad nodes
-    frozen = {(r.node, r.rep) for r in dedup.connected_components_star(
-        pairs, freeze_min_edges=0).collect()}
-    assert frozen == prop
-
+    local = _components(pairs)
+    distributed = _components(pairs, local_solve_max_edges=0)
+    assert local == distributed
     # chain root check: every chain node labels to the chain minimum
-    assert all(rep == 100 for node, rep in stars if 100 <= node <= 160)
+    assert all(rep == 100 for node, rep in local if 100 <= node <= 160)
+
+
+def test_components_drop_self_loops_and_duplicate_pairs(spark):
+    """One contract on both paths: duplicate and reversed pairs count
+    once, self-loops are dropped (a node paired only with itself is a
+    singleton and never appears), and every node appears once."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (3, 3), (4, 4), (5, 4), (5, 5)],
+        "id_a long, id_b long",
+    )
+    want = {(1, 1), (2, 1), (4, 4), (5, 4)}
+    for kw in ({}, {"local_solve_max_edges": 0}):
+        rows = dedup.connected_components(pairs, **kw).collect()
+        assert len(rows) == len(want), kw
+        assert {(r.node, r.rep) for r in rows} == want, kw
 
 
 def test_line_dedup_keeps_first_occurrence_only(spark):

@@ -198,21 +198,15 @@ def test_lsh_near_dup_gemm_is_bucket_local(plans):
     assert "SortMergeJoin" not in p  # grid joins broadcast; dedup agg is hash
 
 
-def test_single_scan_materialization_postures(spark):
-    """r7 one-scan pins: operators whose branches defeat ReuseExchange
-    (differing column pruning) materialize their shared input lazily
-    once — the executed plan must show ZERO parquet scans with the
-    branches replaying cached RDDs. Covers: substring dedup (q_ss1:
-    fingerprints + token explode + doc roster — was FOUR corpus scans)
-    and the blocked-GEMM pa/pb grid joins (q_d5, q_d9).
-
-    q_d2 LEFT this posture in r13: its shingle-table checkpoint was
-    measured slower than recomputing the codegen'd scan→explode, so
-    its pin became the OPPOSITE — recompute scans, no cached-RDD
-    replay of the corpus. r14 tightened it again: the df-order rank
-    now comes from a count window instead of a dfreq self-join, so the
-    corpus is scanned exactly ONCE (1.78→1.49 s at sf0.1, 26.7→12.0 s
-    at the 64× growth point — dedup.py rationale)."""
+def test_single_scan_materialization_postures(spark, monkeypatch):
+    """One-scan pins: operators whose branches defeat ReuseExchange
+    (differing column pruning) materialize their shared input once —
+    the executed plan must show ZERO parquet scans with the branches
+    replaying cached RDDs. Covers: substring dedup (q_ss1:
+    fingerprints + token explode + doc roster), the blocked-GEMM pa/pb
+    grid joins (q_d5, q_d9), and q_d2, whose per-document shingle
+    arrays feed the prefix probe, the prefix broadcast and the verify
+    broadcast."""
     expect = {
         "q_ss1_substring_dedup": 4,
         "q_d5_embedding_near_dup": 2,
@@ -226,14 +220,33 @@ def test_single_scan_materialization_postures(spark):
         assert final.count("FileScan parquet") == 0, (name, final)
         assert final.count("Scan ExistingRDD") >= min_replays, (name, final)
 
+    import re
+
+    cls = type(spark.range(1))
+    checkpoint = cls.localCheckpoint
+    materialized = []
+
+    def recording(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        materialized.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
     df = _q("q_d2_ngram_jaccard").spark(spark, SF_DIR)
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString().split(
         "== Initial Plan =="
     )[0]
-    assert final.count("FileScan parquet") == 1, final  # one scan: window df-order
-    assert final.count("Scan ExistingRDD") == 0, final  # no corpus checkpoint
-    assert "Window" in final, final  # the df rank is the count window
+    assert final.count("FileScan parquet") == 0, final
+    replays = re.findall(r"Scan ExistingRDD\[(\w+)#\d+L?,(\w+)#\d+,(\w+)#\d+\]", final)
+    assert final.count("Scan ExistingRDD") == len(replays) >= 2, final
+    assert set(replays) == {("_id", "_arr", "_sz")}, final
+    # the arrays are the one materialization: one corpus scan, df
+    # order from the count window
+    assert len(materialized) == 1, materialized
+    arrays = materialized[0].split("== Initial Plan ==")[0]
+    assert arrays.count("FileScan parquet") == 1, arrays
+    assert "Window" in arrays, arrays
 
 
 def test_minhash_single_tokenize_pass(spark):

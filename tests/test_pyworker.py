@@ -105,8 +105,14 @@ def daemons(spark):
 
 
 out = {}
-supplied = SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+supplied = (
+    SparkSession.builder.master("local[2]").config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "America/New_York").getOrCreate()
+)
+keys = ["spark.sql.session.timeZone", "spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold"]
+out["supplied_conf_before"] = [supplied.conf.get(k) for k in keys]
 same = get_session(cpus=2)
+out["supplied_conf_after"] = [supplied.conf.get(k) for k in keys]
 out["supplied_is_kept"] = same is supplied
 out["supplied_daemon_conf"] = same.sparkContext.getConf().get("spark.python.daemon.module")
 out["supplied_daemons"] = daemons(same)
@@ -182,5 +188,7 @@ def test_get_session_runs_python_workers_from_any_cwd(driver_run):
 
 def test_supplied_session_keeps_stock_daemon(driver_run):
     assert driver_run["supplied_is_kept"]
+    assert driver_run["supplied_conf_before"][0] == "America/New_York"
+    assert driver_run["supplied_conf_after"] == driver_run["supplied_conf_before"]
     assert driver_run["supplied_daemon_conf"] is None
     assert driver_run["supplied_daemons"] == ["pyspark.daemon"]

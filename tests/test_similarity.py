@@ -197,7 +197,7 @@ def test_semantic_dedup_canonical_keep(spark, emb):
     from electrician_spark.operators import dedup
 
     exact_pairs = sim.cosine_pairs(emb, threshold=0.4)
-    comps = dedup.connected_components_star(exact_pairs)
+    comps = dedup.connected_components(exact_pairs)
     drop = {r.node for r in comps.filter(F.col("node") != F.col("rep")).collect()}
     all_ids = {r.vec_id for r in emb.select("vec_id").collect()}
 

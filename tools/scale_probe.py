@@ -131,7 +131,7 @@ def main() -> None:
 
     def op_clusters(docs, n_docs):
         pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.8, n_docs=n_docs)
-        return dedup.connected_components_star(pairs).count()
+        return dedup.connected_components(pairs).count()
 
     ops = {
         "q_d2_ngram_jaccard": op_jaccard,
