@@ -25,49 +25,30 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
 # Timed and reported separately from the 12 bench=True headline queries
-# so the headline total stays comparable round-over-round while the
-# heavyweight iterative operators (cluster propagation, decontamination)
-# still get a tracked number.
+# so the headline total stays comparable run over run while the
+# heavyweight operators still get a tracked number. Every name must be a
+# live registry row.
 EXTRA_QUERIES = [
     "q_d6_dup_clusters",
-    "q_d8_decontaminate",
     "q_aj1_asof_join",
     "q_rj1_range_join",
     "q_ht1_hypertable_rollup",
-    # q_j7 retired r11 -> archive, succeeded in the series by the new
-    # unigram hard-EM training-round row (the multi-way-join shape
-    # stays tracked via the q_j2 headline row)
     "q_em1_unigram_hard_em",
     "q_x7_quality_filter_pipeline",
-    # r12 promotion: the trained-gate curation pipeline (q_x7's chain
-    # with the NB-langid confidence gate swapped in)
     "q_x9_trained_gate_pipeline",
     "q_n4_ann_ivf_probes",
     "q_d9_lsh_near_dup",
     "q_x8_curation_pipeline",
-    # r6 rows (new operators promoted to the driver window this round;
-    # q_ss1 retired r10 -> archive, succeeded in the series by q_sa1)
-    # q_lm1 retired r12 -> archive, succeeded in the series by the new
-    # protobuf envelope wire-codec row (the LM-bucket shape stays
-    # tracked via the live q_lm2 row below)
     "q_pb1_proto_envelope",
     "q_ch1_chunk_documents",
-    # r7 promotion rows (tracked from their first driver-attested
-    # round; q_pk2 retired r9 -> archive, dropped from the series)
     "q_gq1_gopher_battery",
     "q_lm2_bigram_buckets",
     "q_pq1_pq_adc_topk",
-    # mid-r7 promotions (C4 battery + multimodal decode/resize;
-    # q_vf1 retired r9 -> archive, dropped from the tracked series)
     "q_c4_1_c4_cleaning",
     "q_px1_image_pixel_stats",
     "q_rz1_resize_media",
-    # late-r7 promotions (DSIR selection + perceptual image hashing)
     "q_ir1_dsir_select",
     "q_ph1_image_phash",
-    # r8 promotion rows (tracked from their first driver-attested
-    # round; the IO-bound q_wd1 tar export and the streaming q_rs1 are
-    # left out of the timed series like q_sh1/q_es1 before them)
     "q_rb1_robots_gate",
     "q_pg1_pagerank",
     "q_id1_incremental_dedup",
@@ -76,17 +57,11 @@ EXTRA_QUERIES = [
     "q_fim1_fim_transform",
     "q_ex1_exif_census",
     "q_sv1_split_corpus",
-    # r9 promotion rows (tracked from their first driver-attested
-    # round; the streaming q_rl1/q_fo1 and the fixture-synthesis-bound
-    # q_wc1 are left out of the timed series like q_rs1/q_wd1)
     "q_wp1_wordpiece_encode",
     "q_or1_orc_roundtrip",
     "q_lb1_length_batches",
     "q_cm1_count_min",
     "q_bq1_binary_hamming_tier",
-    # q_ah1 retired r11 -> archive, succeeded in the series by the new
-    # model-based language-ID row (perceptual hashing stays tracked
-    # via q_ph1)
     "q_li1_langid_model",
     "q_cml1_chatml_render",
     "q_pp1_preference_pairs",
@@ -95,16 +70,9 @@ EXTRA_QUERIES = [
     "q_fc1_frozen_linear_scores",
     "q_aq1_audio_quality",
     "q_bp1_bpe_encode",
-    # r10 promotion rows (q_ss1 retired r10 -> archive but stays in the
-    # series through its replacement q_sa1, the same substring-dedup
-    # capability on the suffix-doubling path; the streaming q_cb1/q_ev1
-    # are left out of the timed series like q_rl1/q_fo1 before them)
     "q_ug1_unigram_viterbi_encode",
     "q_sa1_suffix_spans",
     "q_sx1_suffix_array_order",
-    # r14 promotion rows (tracked from their first driver-attested
-    # round; the streaming q_kc1 consume round-trip is left out of the
-    # timed series like q_rs1/q_fo1 before it)
     "q_sk2_salted_join",
     "q_ac1_blocklist_scan",
 ]
@@ -290,11 +258,10 @@ def main() -> None:
     results = run_set(names)
     sample_probes()
 
-    extra_names = [n for n in EXTRA_QUERIES if n in REGISTRY]
-    mid = len(extra_names) // 2
-    extras = run_set(extra_names[:mid])
+    mid = len(EXTRA_QUERIES) // 2
+    extras = run_set(EXTRA_QUERIES[:mid])
     sample_probes()
-    extras.update(run_set(extra_names[mid:]))
+    extras.update(run_set(EXTRA_QUERIES[mid:]))
     sample_probes()
 
     def _timed(thunk) -> float:

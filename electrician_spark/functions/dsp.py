@@ -40,14 +40,6 @@ def energy(re: Column, im: Column | None = None) -> Column:
     return F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def snr(re_signal: Column, im_signal: Column, re_noise: Column, im_noise: Column) -> Column:
-    """10·log10(E_signal / E_noise) as a JVM expression over the
-    sequential-fold energies (utils.go:200-216 SNR). Deterministic
-    across engines; use this — not the pandas UDF — wherever the wave
-    is already split into (re, im) arrays."""
-    return 10.0 * F.log10(energy(re_signal, im_signal) / energy(re_noise, im_noise))
-
-
 def _to_complex(re: pd.Series, im: pd.Series) -> list[np.ndarray]:
     return [np.asarray(r, dtype=np.float64) + 1j * np.asarray(i, dtype=np.float64) for r, i in zip(re, im)]
 
@@ -83,9 +75,9 @@ def total_energy(re: pd.Series, im: pd.Series) -> pd.Series:
 
 @F.pandas_udf(DoubleType())
 def snr_db(re_signal: pd.Series, im_signal: pd.Series, re_noise: pd.Series, im_noise: pd.Series) -> pd.Series:
-    """10·log10(E_signal / E_noise) (utils.go:200-216 SNR). Prefer the
-    JVM :func:`snr` expression (see :func:`energy` note); vectorized
-    per-batch here, no per-row Python loop."""
+    """10·log10(E_signal / E_noise) (utils.go:200-216 SNR), vectorized
+    per batch. For a cross-engine hash-stable form take 10·log10 of two
+    :func:`energy` folds."""
     es = np.array(
         [float(np.asarray(r).dot(np.asarray(r)) + np.asarray(i).dot(np.asarray(i)))
          for r, i in zip(re_signal, im_signal)]

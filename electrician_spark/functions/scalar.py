@@ -2,10 +2,10 @@
 JVM-side Column expressions (never row-at-a-time Python; SURVEY §2.10).
 
 Covers: keyword filter/classifier/tagger (the Feedback pipeline,
-/root/reference/example/conduit_example/chain/main.go:21-59), sha256
-hashing (types/element.go:29-37, benchmark workload), JSON encode/decode
-(pkg/internal/codec/json.go), and the ``{field}`` key-template expansion
-used by the Kafka/S3 writers (adapter/kafkaclient/templates.go:9-60).
+example/conduit_example/chain/main.go:21-59) and the
+``{field}`` key-template expansion used by the Kafka/S3 writers
+(adapter/kafkaclient/templates.go:9-60). Hashing and JSON are Spark
+builtins (``F.sha2``, ``F.to_json``, ``F.get_json_object``).
 """
 
 from __future__ import annotations
@@ -40,24 +40,6 @@ def tag_when(tags_col: Column, cond: Column, tag: str) -> Column:
     """Append a tag when a condition holds — the sentiment tagger
     (chain/main.go:49-59): array_union keeps tags unique."""
     return F.when(cond, F.array_union(tags_col, F.array(F.lit(tag)))).otherwise(tags_col)
-
-
-def sha256_hex(col: Column) -> Column:
-    """Deterministic sha256 hex digest (reference element hashing,
-    types/element.go:29-37; benchmark sha256 rounds,
-    example/benchmark_example/processing/main.go:85-104)."""
-    return F.sha2(col, 256)
-
-
-def json_encode(*cols: str) -> Column:
-    """Encode selected fields as a JSON object string — the encoder tap
-    (wire/config.go:64) / JSON codec encode (codec/json.go:25-35)."""
-    return F.to_json(F.struct(*cols))
-
-
-def json_get(col: Column, path: str) -> Column:
-    """Extract a field from a JSON payload string (codec/json.go decode)."""
-    return F.get_json_object(col, path)
 
 
 _TEMPLATE_RE = re.compile(r"\{([A-Za-z_][A-Za-z0-9_]*)\}")

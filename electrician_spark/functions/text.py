@@ -43,10 +43,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def avg_token_len(text: Column) -> Column:
     toks = tokens(text)
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
@@ -57,19 +53,6 @@ def stopword_ratio(text: Column, stopwords: tuple[str, ...] = DEFAULT_STOPWORDS)
     toks = tokens(text)
     stops = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
     return stops / F.size(toks)
-
-
-def quality_score(text: Column, stopwords: tuple[str, ...] = DEFAULT_STOPWORDS) -> Column:
-    """Composite quality heuristic in [0,1]: favors mid-length documents
-    with a natural stopword rate — the length/punct/stopword family of
-    filters used to score LLM training text."""
-    n_tok = token_count(text)
-    length_term = F.least(n_tok / F.lit(64.0), F.lit(1.0))
-    stop = stopword_ratio(text, stopwords)
-    stop_term = F.lit(1.0) - F.abs(stop - F.lit(0.08)) * 4
-    return F.round(
-        F.greatest(F.lit(0.0), F.least(F.lit(1.0), (length_term + stop_term) / 2)), 6
-    )
 
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:

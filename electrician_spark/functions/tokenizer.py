@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from electrician_spark.functions.text import token_frequency_table
+from electrician_spark.io import local_frame
 
 # End-of-word sentinel appended to every word's symbol sequence so
 # merges distinguish word-final from word-internal contexts ("est</w>"
@@ -636,29 +637,16 @@ def unigram_hard_em_round(
         .groupBy("token")
         .agg(F.count("*").alias("count"))
     )
-    try:
-        wf = wf.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    wf = wf.localCheckpoint(eager=False)
 
     def _obj_and_counts(m: list[tuple[str, float]]):
         """Objective AND per-piece counts from ONE aggregation job.
 
-        The pre-r15 form ran the Viterbi encode twice per model — once
-        under an `agg(sum)` for the objective, once under a
-        `groupBy(piece)` for the M-step counts (the encode is the
-        round's dominant cost: an Arrow pass over every distinct
-        word). Both quantities are derivable from the same bounded
-        (piece, lp_u, Σcount) census — obj = Σ lp_u·c over in-support
-        pieces (out-of-support pieces contributed 0 via the old
-        coalesce), counts = the in-support rows — so one groupBy
-        collect (≤ support + fallback alphabet rows) replaces two full
-        encode passes (guide §1.2: remove passes before tuning them;
-        r15 interleaved A/B: the round 2.87→2.13 s median at sf0.1,
-        model and stats byte-identical)."""
-        mdf = spark.createDataFrame(
-            [(p, int(round(lp * q))) for p, lp in m], "piece string, lp_u long"
-        )
+        Both derive from the bounded (piece, lp_u, Σcount) census —
+        obj = Σ lp_u·c over in-support pieces, counts = the in-support
+        rows — so the Viterbi encode (the round's dominant cost) runs
+        once per model, not once per quantity."""
+        mdf = local_frame(spark, [(p, int(round(lp * q))) for p, lp in m], "piece string, lp_u long")
         # split_words=False: each table entry IS one word (the
         # distributed Java \s+ split already tokenized); a Python
         # re-split would fragment tokens containing non-ASCII Unicode

@@ -25,6 +25,8 @@ from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from electrician_spark.io import local_frame
+
 # Multi-part public suffixes common enough that the 2-label heuristic
 # would otherwise mis-root a large corpus share. Heuristic, documented;
 # see module docstring for the full-PSL upgrade path.
@@ -163,9 +165,7 @@ def filter_blocklisted_domains(
     already-materialized domain column instead of re-deriving it."""
     spark = df.sparkSession
     if not isinstance(blocklist, DataFrame):
-        blocklist = spark.createDataFrame(
-            [(d.lower(),) for d in blocklist], "domain string"
-        )
+        blocklist = local_frame(spark, [(d.lower(),) for d in blocklist], "domain string")
     bl = blocklist.select(F.lower(F.col(blocklist.columns[0])).alias("__bl_domain")).distinct()
     if domain_col is None:
         probe = df.withColumn("__probe_domain", registered_domain(url_host(F.col(url_col))))

@@ -25,6 +25,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 TABLES = (
     "region",
@@ -76,6 +77,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dict(df.dtypes).get(c) == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: str | StructType) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` order) as a local relation.
+
+    ``createDataFrame`` over a Python list builds a Python RDD, so every
+    read of it starts Python worker tasks; the same rows as a
+    ``pyarrow.Table`` plan as a ``LocalTableScan`` and start none."""
+    import pyarrow as pa
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    cols = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.table({f.name: pa.array(list(c)) for f, c in zip(struct.fields, cols)})
+    return spark.createDataFrame(table, schema=struct)
 
 
 def fan_out_small(

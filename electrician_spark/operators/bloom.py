@@ -100,10 +100,7 @@ def with_bloom_membership(
     # build 4x; guide §2.4 — don't recompute a shared subtree). The
     # cached artifact is the ≤ ⌈m/63⌉-row word table, bounded by the
     # module contract, never the key set.
-    try:
-        bloom_df = bloom_df.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    bloom_df = bloom_df.localCheckpoint(eager=False)
     cur = df
     flags = []
     for j in range(1, k + 1):
@@ -170,18 +167,12 @@ def contamination_scores_bloom(
     size, just not shuffle-free); the candidate count is one cheap
     job on the already-checkpointed survivor set."""
     sh_c = _shingle_table(corpus, id_col, text_col, n, None)
-    try:
-        sh_c = sh_c.localCheckpoint()  # probed + counted + hit-joined
-    except Exception:  # noqa: BLE001
-        pass
+    sh_c = sh_c.localCheckpoint()  # probed + counted + hit-joined
     sh_t = _shingle_table(testset, id_col, text_col, n, None).select("_s")
     bloom = build_bloom(sh_t, "_s", m_bits, k)
     probed = with_bloom_membership(sh_c, "_s", bloom, m_bits, k)
     cand = probed.filter(F.col("maybe_member")).select("_s").distinct()
-    try:
-        cand = cand.localCheckpoint()  # counted (guard) + verify-joined
-    except Exception:  # noqa: BLE001
-        pass
+    cand = cand.localCheckpoint()  # counted (guard) + verify-joined
     small = cand.count() <= max_broadcast_rows
     bcast = F.broadcast if small else (lambda df: df)
     verified = (

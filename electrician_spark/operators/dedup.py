@@ -28,17 +28,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from electrician_spark.functions import text as tx
+from electrician_spark.io import local_frame
 
 
 def normalize_text(text: Column) -> Column:
     return F.lower(F.concat_ws(" ", tx.tokens(text)))
-
-
-def exact_dedup_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """n_rows vs n_distinct normalized fingerprints (hash-groupBy dedup)."""
-    return df.select(tx.fingerprint(F.col(text_col)).alias("fp")).agg(
-        F.count("*").alias("n_rows"), F.countDistinct("fp").alias("n_distinct")
-    )
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", keep_col: str | None = None) -> DataFrame:
@@ -627,12 +621,8 @@ def connected_components(
 
 
 def _union_find_components(edges: DataFrame) -> DataFrame:
-    """(node, rep) for a small (a, b) edge list, solved on the driver.
-    The answer goes back as an Arrow table, which Spark plans as a local
-    relation; a list of rows would become a Python RDD that needs Python
-    workers to read."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
+    """(node, rep) for a small (a, b) edge list, solved on the driver
+    and returned as a local relation (``io.local_frame``)."""
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -655,12 +645,7 @@ def _union_find_components(edges: DataFrame) -> DataFrame:
             parent[hi] = lo
     id_type = edges.schema[0].dataType
     schema = StructType([StructField("node", id_type, False), StructField("rep", id_type, False)])
-    arrow_type = to_arrow_type(id_type)
-    table = pa.table({
-        "node": pa.array(list(parent), arrow_type),
-        "rep": pa.array([find(n) for n in parent], arrow_type),
-    })
-    return edges.sparkSession.createDataFrame(table, schema=schema)
+    return local_frame(edges.sparkSession, [(n, find(n)) for n in parent], schema)
 
 
 def canonical_docs(
@@ -864,11 +849,7 @@ def _tokens_table(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ReuseExchange — without the cache the corpus was scanned+tokenized
     up to 4×."""
     t = docs.select(F.col(id_col).alias("_id"), tx.tokens(F.col(text_col)).alias("_tk"))
-    try:
-        t = t.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
-    return t
+    return t.localCheckpoint(eager=False)
 
 
 def _flagged_sites(tk_all: DataFrame, min_len: int, keep: str | None) -> DataFrame:
@@ -894,10 +875,7 @@ def _flagged_sites(tk_all: DataFrame, min_len: int, keep: str | None) -> DataFra
             ).alias("_fp"),
         )
     )
-    try:
-        sites = sites.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001
-        pass
+    sites = sites.localCheckpoint(eager=False)
     grouped = sites.groupBy("_fp").agg(
         F.count("*").alias("_cnt"),
         F.min(F.struct(F.col("_id").alias("i"), F.col("_p").alias("p"))).alias("_first"),

@@ -165,11 +165,8 @@ def log_ratio_table(
     §1.2/§2.4 — don't recompute what an action already computed). The
     cached artifact is ≤ n_buckets count rows per model — bounded by
     the model contract, never corpus-sized."""
-    try:
-        target_counts = target_counts.localCheckpoint(eager=False)
-        raw_counts = raw_counts.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    target_counts = target_counts.localCheckpoint(eager=False)
+    raw_counts = raw_counts.localCheckpoint(eager=False)
     t_total = target_counts.agg(F.sum("cnt")).collect()[0][0] or 0
     r_total = raw_counts.agg(F.sum("cnt")).collect()[0][0] or 0
     lt, lr = math.log(t_total + n_buckets), math.log(r_total + n_buckets)

@@ -130,10 +130,7 @@ def incremental_dedup(
     bounded number of times (exact probe, band probe, candidate
     signature fetch) and shuffled never."""
     bidx = build_dedup_index(batch_df, id_col, text_col, n, num_hashes, small=True)
-    try:
-        bidx = bidx.localCheckpoint()  # consumed by 3 probes below
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    bidx = bidx.localCheckpoint()  # consumed by 3 probes below
     hcols = [f"h{i}" for i in range(num_hashes)]
 
     # --- exact probe: index ⋉ broadcast(batch fps), matches broadcast back
@@ -157,10 +154,7 @@ def incremental_dedup(
         .selectExpr("_b_id", "_id AS _i_id")
         .distinct()
     )
-    try:
-        cand_pairs = cand_pairs.localCheckpoint()  # feeds sig fetch + scoring
-    except Exception:  # noqa: BLE001
-        pass
+    cand_pairs = cand_pairs.localCheckpoint()  # feeds sig fetch + scoring
     # candidate index signatures: one more index scan, broadcast-semi
     # against the (small) candidate id set — still no index shuffle
     cand_ids = cand_pairs.selectExpr(f"_i_id AS `{id_col}`").distinct()
@@ -277,10 +271,7 @@ def incremental_dedup_sink(
         res = incremental_dedup(
             batch, index, id_col, text_col, n, num_hashes, bands, sim_threshold
         )
-        try:
-            res = res.localCheckpoint()  # decide ONCE, feed two writes
-        except Exception:  # noqa: BLE001
-            pass
+        res = res.localCheckpoint()  # decide ONCE, feed two writes
         admitted = res.filter(F.col("dup_kind").isNull())
         admitted_sink(
             batch.join(admitted.select(id_col), id_col, "left_semi"), epoch_id

@@ -50,6 +50,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from electrician_spark.io import local_frame
+
 
 def char_ngrams(text: Column, n: int = 2) -> Column:
     """Character n-grams of lowercased text (spaces included — word
@@ -163,10 +165,7 @@ def train_langid(
         docs.select(F.col(lang_col).alias("lang"), text_col), ["lang"], text_col, n
     )
     counts = grams.groupBy("gram", "lang").agg(F.count("*").alias("c"))
-    try:
-        counts = counts.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    counts = counts.localCheckpoint(eager=False)
     # Tie-break the top-K cut on the UTF-8 BYTE encoding, not Spark's
     # native string sort (UTF-16 code-unit order): DuckDB's ORDER BY is
     # binary UTF-8 (code-point) order, and a count tie at the max_grams
@@ -277,10 +276,7 @@ def langid_scores(
     lp_by_gram: dict[str, list[int]] = {}
     for gram, lang, lp in model.grams:
         lp_by_gram.setdefault(gram, [0] * len(langs))[pos[lang]] = lp
-    mdf = spark.createDataFrame(
-        [(g, v) for g, v in sorted(lp_by_gram.items())],
-        "gram string, lps array<long>",
-    )
+    mdf = local_frame(spark, sorted(lp_by_gram.items()), "gram string, lps array<long>")
     carry = list(carry or [])
     # reserved: the exploded gram + internal aliases (_s/_i from
     # _exploded_grams, lps from the broadcast model, _s{i}/_sc{i} sum

@@ -44,6 +44,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from electrician_spark.functions.text import tokens
+from electrician_spark.io import local_frame
 
 
 def _lm_tokens(text):
@@ -106,9 +107,7 @@ def unigram_lm(
         (r["token"], math.log((int(r["c"]) + alpha) / denom), oov_logprob)
         for r in count_rows
     ]
-    return ref_df.sparkSession.createDataFrame(
-        model, "token string, logprob double, oov_logprob double"
-    )
+    return local_frame(ref_df.sparkSession, model, "token string, logprob double, oov_logprob double")
 
 
 def lm_score(
@@ -244,7 +243,8 @@ def bigram_lm(
     v = len(count_rows)
     denom = n + alpha * (v + 1)
     oov_logprob = math.log(alpha / denom)
-    uni = ref_df.sparkSession.createDataFrame(
+    uni = local_frame(
+        ref_df.sparkSession,
         [(t, math.log((c + alpha) / denom), oov_logprob) for t, c in count_rows],
         "token string, logprob double, oov_logprob double",
     )
@@ -267,7 +267,7 @@ def bigram_lm(
         (p, t, math.log(c / prev_totals[p])) for p, t, c in kept
     ]
     spark = ref_df.sparkSession
-    bi = spark.createDataFrame(bi_model, "prev string, token string, logscore double")
+    bi = local_frame(spark, bi_model, "prev string, token string, logscore double")
     return uni, bi
 
 
@@ -364,10 +364,7 @@ def perplexity_buckets(
     # triggers it, the bucket pass replays it); what lands on disk is
     # three narrow columns per document, not the corpus. Measured at
     # sf0.1: bigram-LM bucket pipeline 4.1 s → one shared compute.
-    try:
-        scored = scored.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — exotic plans: fall back to recompute
-        pass
+    scored = scored.localCheckpoint(eager=False)
     qs = [i / n_buckets for i in range(1, n_buckets)]
     cuts = scored.approxQuantile("perplexity", qs, relative_error)
     expr = F.lit(labels[-1])

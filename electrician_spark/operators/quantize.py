@@ -161,10 +161,7 @@ def pq_train(
     # re-scans the source and re-explodes m subvectors per row,
     # 2+iters corpus scans total. One executor-local write, replayed
     # by all passes.
-    try:
-        subs = subs.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — exotic plans: fall back to recompute
-        pass
+    subs = subs.localCheckpoint(eager=False)
 
     # deterministic seeds: per subspace, k DISTINCT subvectors, each
     # represented by its smallest (md5(id), id) carrier — distinctness

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from electrician_spark.io import local_frame
+
 
 # Cap for "broadcast-small by contract" driver collects (query sets,
 # IVF centroid tables). The GEMM paths ship these to every task in the
@@ -159,12 +161,9 @@ def _grouped_gemm(
     # materialization the whole upstream plan (scan + bucket exprs)
     # runs twice. Lazy: no build-time job; the first action computes
     # the bucketed rows once and both join sides replay the cache.
-    try:
-        nv = nv.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
-    grid = spark.createDataFrame(
-        [(a, b) for a in range(b_count) for b in range(a, b_count)], "pa int, pb int"
+    nv = nv.localCheckpoint(eager=False)
+    grid = local_frame(
+        spark, [(a, b) for a in range(b_count) for b in range(a, b_count)], "pa int, pb int"
     )
     rep_a = nv.join(F.broadcast(grid), nv["_blk"] == grid["pa"]).select(
         *group_cols, "pa", "pb", "_id", "_v", F.lit(0).alias("_side")
@@ -429,10 +428,7 @@ def kmeans_labels(
     # once (executor-local) instead of re-scanning the source iters+2
     # times; what lands on disk is (id, vector), the columns Lloyd's
     # needs anyway.
-    try:
-        v = v.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — exotic plans: fall back to recompute
-        pass
+    v = v.localCheckpoint(eager=False)
     seed_key = F.md5(F.col("_kid").cast("string"))
     seeds = v.orderBy(seed_key, "_kid").limit(k).collect()
     cents = [(i, list(r["_kv"])) for i, r in enumerate(seeds)]
@@ -444,7 +440,7 @@ def kmeans_labels(
     # (lowest cl on ties), float64 both ways.
     def _assign(cent_list):
         if k <= 8:
-            cdf = spark.createDataFrame(cent_list, "cl int, centroid array<double>")
+            cdf = local_frame(spark, cent_list, "cl int, centroid array<double>")
             return _nearest_centroid(v, cdf)
         return _nearest_centroid_pandas(v, cent_list)
 

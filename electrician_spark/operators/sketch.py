@@ -236,10 +236,7 @@ def count_min_estimate(
     don't recompute a shared subtree). The cached artifact is ≤ d·w
     cell rows, bounded by the sketch contract, never the keyed
     stream."""
-    try:
-        sketch = sketch.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    sketch = sketch.localCheckpoint(eager=False)
     sw, sd = _cm_geometry(sketch)
     if (sw, sd) == (0, 0):  # empty sketch: every probe estimates 0
         sw = width if width is not None else 1024

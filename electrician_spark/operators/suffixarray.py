@@ -155,10 +155,7 @@ def sa_duplicated_spans(
     sites = window_fingerprints(docs, min_len, id_col, text_col).select(
         F.col(id_col).alias("_id"), F.col("pos").alias("_p"), F.col("fp").alias("_fp")
     )
-    try:
-        sites = sites.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    sites = sites.localCheckpoint(eager=False)
     grouped = sites.groupBy("_fp").agg(
         F.count("*").alias("_cnt"),
         F.min(F.struct(F.col("_id").alias("i"), F.col("_p").alias("p"))).alias(
@@ -213,10 +210,7 @@ def longest_repeated_run(
         return 0
     max_level = int(math.floor(math.log2(hi))) if hi > 1 else 0
     pos = _with_doubling_fps(pos0, max_level)
-    try:
-        pos = pos.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    pos = pos.localCheckpoint(eager=False)
     w = _doc_window()
 
     def has_dup(length: int) -> bool:
@@ -493,21 +487,6 @@ def suffix_array(
     n_total = int(stats["n"] or 0)
     w = _doc_window()
 
-    def _cut(df: DataFrame) -> DataFrame:
-        # LAZY lineage cut: flattens the plan to a leaf that PRESERVES
-        # the child's partitioning and ordering (LogicalRDD carries
-        # both); blocks materialize inside the final action, not as a
-        # per-round driver barrier. In the compact regime each round
-        # is consumed ONCE, so this only bounds optimizer time on very
-        # deep corpora (every 4th round — see the loop comment); the
-        # r11 design consumed each round twice and needed per-2-round
-        # cuts, which measured ~2 s of pure barrier cost and were
-        # removed with the rebuild.
-        try:
-            return df.localCheckpoint(eager=False)
-        except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-            return df
-
     if n_total <= compact_rank_max_rows:
         # Level 0 (r15): dense rank via the DISTINCT token vocabulary —
         # rank the (much smaller) vocab in one bounded single-partition
@@ -582,12 +561,13 @@ def suffix_array(
             # 4th round only bounds optimizer time on very deep
             # corpora (t ~ 15: 4 rounds already identify 50k-token
             # prefixes; typical corpora finish in 2-3 rounds with the
-            # whole array as one pipelined plan and zero checkpoint
-            # blocks — the r11 per-2-round cuts measured ~2 s of pure
-            # barrier cost here).
+            # whole array as one pipelined plan). The cut is a leaf
+            # that keeps the child's partitioning and ordering and
+            # materializes inside the final action, not as a driver
+            # barrier.
             rounds += 1
             if rounds % 4 == 0:
-                ranked = _cut(ranked)
+                ranked = ranked.localCheckpoint(eager=False)
             half *= t
         return ranked.select(
             F.col("_id").alias(id_col),

@@ -21,6 +21,7 @@ observed in /root/testdata.
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +66,23 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def TS(s: str):
     return F.lit(s).cast("timestamp")
+
+
+@contextmanager
+def _state_partitions(spark: SparkSession, n: int = 8):
+    """Run a streaming query with ``n`` shuffle (= state) partitions.
+
+    A stateful query freezes its state-partition count from the session
+    conf when it starts; a handful of keys under a default 200-partition
+    session means hundreds of near-empty state tasks per micro-batch
+    (q_rs1: 600 state tasks over three micro-batches, 36 s against 8 s).
+    The caller's value is restored on exit, exceptions included."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 # ---------------------------------------------------------------------------
@@ -122,24 +140,9 @@ def q_s3(spark, sf_dir):
     )
 
 
-
-
-
 # ---------------------------------------------------------------------------
 # §2.2 Transforms (projection / filter / classify / hash / encode)
 # ---------------------------------------------------------------------------
-
-
-
-
-
-# (q_t3_keyword_filter: RETIRED r14 -> electrician_spark.retired,
-# making room for q_ac1 — the STRICTLY HARDER form of the same T3
-# capability: the 3-term contains_any census is subsumed by the
-# ~1k-term Aho-Corasick blocklist census below, which counts per-term
-# document hits over the same corpus in one automaton pass;
-# scalar.contains_any keeps its test_pipeline pins and stays live
-# inside q_x7's filter stage.)
 
 
 @query(
@@ -199,28 +202,6 @@ def q_ac1(spark, sf_dir):
     return rel.top_k(per_term, [F.col("n_docs").desc(), F.col("term")], 50)
 
 
-# (q_t5_classifier: RETIRED r14 -> electrician_spark.retired. The
-# classify CASE chain + default bucket stays live on the attested path
-# inside q_x7_quality_filter_pipeline (same scalar.classify operator,
-# this window) and the trained-classifier tier q_fc1; sf.classify keeps
-# its test_pipeline pins.)
-
-
-# (q_t9_sha256: RETIRED r8 -> electrician_spark.retired. the sha2 transform is
-# attested end-to-end by the q_sh1/q_wd1 manifest rows (executor-side sha256
-# over real bytes) and the bench sha256 pipeline.)
-
-
-# (q_t10_json_encode: RETIRED r9 -> electrician_spark.retired. to_json
-# scalar shape; JSON machinery stays live via q_f5_json_extract and the
-# q_k2 NDJSON sink round-trip, which encodes JSON on the real write path.)
-
-
-# (q_t11_key_template: RETIRED r9 -> electrician_spark.retired. {field}
-# template expansion stays live on the attested path via q_wd1's
-# format_string key stems ('{shuffle_key:010d}_{id}' sample keys).)
-
-
 # ---------------------------------------------------------------------------
 # §2.4 Aggregations (meter family)
 # ---------------------------------------------------------------------------
@@ -243,25 +224,6 @@ def q_a1(spark, sf_dir):
     return rel.pricing_summary(_t(spark, sf_dir, "lineitem"), "2000-09-02")
 
 
-# (q_a2_rate_per_hour: RETIRED r14 -> electrician_spark.retired. The
-# A2 time-bucket rate census stays live via q_w1_tumbling_hour (bench
-# headline, SAME hourly bucketing over the same events table through
-# the streaming-window operator) and q_ht1's multi-grain rollup;
-# metrics rate math keeps its test_metrics pins and the archived q_a5
-# peak-rate row.)
-
-
-# (q_a3_error_ratio: RETIRED r9 -> electrician_spark.retired. the
-# conditional-aggregate ratio shape stays live via q_a2 rate buckets and
-# the q_gq1 battery's per-rule pass ratios; A3 semantics test-pinned in
-# test_metrics.)
-
-
-# (q_a4 count-distinct, q_a5 peak rate, q_a6 grouped stats: RETIRED r7
-# — redundant agg siblings; A1/A2/A3 stay attested via q_a1/q_a2/q_a3,
-# distinct counting via q_ds1/q_pr1, agg-of-agg via q_o1.)
-
-
 @query(
     "q_q1_grouped_quantiles",
     "SELECT l_returnflag, round(quantile_cont(l_extendedprice, 0.5), 6) AS p50, "
@@ -282,12 +244,6 @@ def q_q1(spark, sf_dir):
         probs=(0.5, 0.9, 0.99),
         group_cols=["l_returnflag"],
     ).orderBy("l_returnflag")
-
-
-# (q_q2 winsorized stats: RETIRED r7 — the per-group quantile-bounds +
-# broadcast-clamp shape stays attested via q_q1 (percentile machinery)
-# and q_lm2 (approxQuantile threshold path); olap.clip_quantiles keeps
-# its test_olap equivalence pins.)
 
 
 # Planted C4 page structure: '. ' sentence breaks become newlines, and
@@ -478,11 +434,6 @@ def q_pr1(spark, sf_dir):
     ).orderBy("column")
 
 
-# (q_hg1 price histogram: RETIRED r7 — the integer-bucket groupBy is
-# the same shape every agg row attests; olap.histogram keeps its
-# test_olap pins and q_pr1 carries the profiling family.)
-
-
 @query(
     "q_px1_image_pixel_stats",
     # Crafted solid-color images make every pixel statistic a pure
@@ -632,10 +583,7 @@ def q_ph1(spark, sf_dir):
     # left join), and each unmaterialized branch re-ran the synth +
     # decode + DCT MapInPandas chain — five decodes of the same rows
     # (guide §2.4; bounded by the doc_id slice, never corpus-sized).
-    try:
-        sig = sig.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    sig = sig.localCheckpoint(eager=False)
     pairs = dedup.hamming_pairs(sig, "media_id", "phash", max_hamming=3)
     near = (
         pairs.select(F.col("id_a").alias("media_id"))
@@ -707,23 +655,6 @@ def q_j2(spark, sf_dir):
     )
 
 
-# (q_j3_left_join: RETIRED r13 -> electrician_spark.retired, making
-# room for q_sj2's left-outer stream-stream interval join row. The
-# left-outer shape is NOT gone from live attestation: the null-padded
-# non-match semantics are now attested in the strictly harder
-# streaming form (q_sj2 — null emission gated on the watermark
-# eviction clock), and the batch LeftOuter plan runs live inside
-# q_ph1/q_af1's near-dup tagging joins, q_cm1's estimate-vs-truth
-# join, and q_ug1's piece-model join, each re-attested every window
-# pass.)
-
-
-# (q_j4_semi_join: RETIRED r9 -> electrician_spark.retired. the LeftSemi
-# plan shape runs live inside q_bl1's verified-member semi-join, q_id1's
-# exact probe, and q_d8's decontamination gate; q_j5 keeps the anti side
-# attested.)
-
-
 @query(
     "q_j5_anti_join",
     "SELECT count(*) AS n FROM customer WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)",
@@ -735,21 +666,6 @@ def q_j5(spark, sf_dir):
     return cust.join(
         orders, cust.c_custkey == orders.o_custkey, "left_anti"
     ).agg(F.count("*").alias("n"))
-
-
-# (q_j6_range_join: RETIRED r12 -> electrician_spark.retired, making
-# room for q_se1's stream-static broadcast enrichment row. The
-# range/theta join condition stays live twice over: q_rj1's bucketed
-# range join (the scale-correct equi-bucket form) and the new q_sj1
-# stream-stream interval join, whose join condition IS an event-time
-# range predicate evaluated inside the streaming state store.)
-
-
-# (q_j7_regional_revenue: RETIRED r11 -> electrician_spark.retired,
-# making room for q_em1's unigram hard-EM training-round row. The
-# multi-way-join capability stays live via q_j2 (TPC-H Q3 three-table)
-# plus the broadcast/left/anti/range join rows; the 6-table Q5 variant
-# keeps its full oracle in the archive.)
 
 
 @query(
@@ -808,14 +724,6 @@ def q_w1(spark, sf_dir):
     ).orderBy("window_start")
 
 
-# (q_w2_sliding_30m_15m: RETIRED r11 -> electrician_spark.retired,
-# making room for q_dw1's streaming dedupe-within-watermark row. The
-# window family keeps four live attestations — tumbling q_w1, session
-# q_w3, real watermark semantics q_wm1, streaming dedupe q_dw1 —
-# and sliding is the same `window()` operator as q_w1 with a slide
-# parameter.)
-
-
 @query(
     "q_w3_session_counts",
     # CAST: DuckDB sum(int) is HUGEINT (int128); Spark emits bigint and the
@@ -834,16 +742,6 @@ def q_w3(spark, sf_dir):
     return win.session_counts(_t(spark, sf_dir, "events"), "ts", "user_id", "10 minutes").orderBy(
         "user_id"
     )
-
-
-# (q_w8_dedupe_key: RETIRED r8 -> electrician_spark.retired. dedupe-by-key is
-# q_d1_exact_dedup's groupBy shape; distinct machinery also via
-# q_u2_union_distinct.)
-
-
-# (q_w9_ordered_replay: RETIRED r8 -> electrician_spark.retired. directly
-# superseded by q_rs1_resequence_stateful, which attests ordered delivery
-# through the REAL applyInPandasWithState path rather than a batch summary.)
 
 
 # ---------------------------------------------------------------------------
@@ -904,23 +802,9 @@ def q_wf2(spark, sf_dir):
     )
 
 
-# (q_wf3 running sum: RETIRED r7 — the ROWS UNBOUNDED PRECEDING frame
-# is exactly the window q_sp1's pack cumsum attests; WF2/WF4 stay via
-# q_wf2/q_wf4.)
-
-
-# (q_wf4_distribution_ranks: RETIRED r9 -> electrician_spark.retired.
-# ntile/percent_rank/cume_dist replay archived; the ranking-window
-# machinery stays live via q_wf1 (rank/dense_rank) + q_wf2 (lag frames)
-# and every grouped-top-k row (q_o2, q_bq1, q_n1).)
-
-
 # ---------------------------------------------------------------------------
 # §2.9 Set operations (fan-in C3 = UNION ALL)
 # ---------------------------------------------------------------------------
-
-
-
 
 
 @query(
@@ -935,49 +819,9 @@ def q_u2(spark, sf_dir):
     return a.unionByName(b).distinct().agg(F.count("*").alias("n"))
 
 
-# (q_u3_except: RETIRED r9 -> electrician_spark.retired. EXCEPT plans as
-# distinct + left-anti — exactly the shape q_j5_anti_join attests live;
-# distinct set machinery stays via q_u2_union_distinct.)
-
-
-# (q_u4 intersect: RETIRED r7 — INTERSECT plans as a left-semi over
-# distinct, the exact shape q_j4_semi_join attests; the set-op family
-# U1–U4 stays attested via q_u2 (union distinct) + q_u3 (except).
-# Slot went to q_ph1 perceptual image hashing, a new operator with a
-# closed-form value oracle.)
-
-
 # ---------------------------------------------------------------------------
 # §2.10 Scalar functions (string / date / math / array / json)
 # ---------------------------------------------------------------------------
-
-
-# (q_f1_string: RETIRED r10 -> electrician_spark.retired. String
-# scalar shapes stay live in q_x3 (lower/regexp), q_gq1/q_c4_1 (the
-# full text-scalar batteries), q_wd1 (concat key stems), and q_f5
-# (string<->json); the top-k LIMIT pin lives on q_o2/q_s3.)
-
-
-# (q_f2_date: RETIRED r9 -> electrician_spark.retired. date scalar
-# extraction stays live via q_k1's {yyyy} partition template, q_wf2's
-# datediff gaps, and q_ht1's calendar rollup buckets.)
-
-
-# (q_f3_math: RETIRED r9 -> electrician_spark.retired. float math
-# scalars stay live via q_p2_snr (log10), q_gq1 ratios, and the cosine
-# family's sqrt/pow (q_n1/q_bq1/q_d5).)
-
-
-# (q_f4_array_agg: RETIRED r8 -> electrician_spark.retired. collect/sort/join
-# array aggregation runs inside q_gq1 (array walks), q_f5 (json arrays), and
-# q_fm1 (map construction).)
-
-
-# (q_f5_json_extract: RETIRED r10 -> electrician_spark.retired, making
-# room for the mid-round q_sx1 suffix-array order row. JSON machinery
-# stays live via q_k2's NDJSON sink round-trip and q_z1's codec
-# battery (json encode/decode attested value-by-value); sf.json_get
-# keeps its test pins.)
 
 
 # ---------------------------------------------------------------------------
@@ -992,24 +836,6 @@ _SQL_SHINGLES_CTE = (
     "idx AS (SELECT doc_id, ws, unnest(range(1, len(ws) - 1)) AS i FROM t), "
     "sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s FROM idx)"
 )
-
-
-
-
-
-# (q_x2_quality_metrics: RETIRED r8 -> electrician_spark.retired.
-# stopword/token-length ratios are strictly subsumed by q_gq1_gopher_battery's
-# 7-rule + 13-signal batteries and the q_x7 pipeline gates.)
-
-
-# (q_x3_language_id: RETIRED r12 -> electrician_spark.retired, making
-# room for q_x9's trained-gate curation pipeline row. The heuristic
-# stopword-profile gate is NOT gone from live attestation: it remains
-# the in-pipeline language gate of q_x7 (same language_id operator,
-# same profiles, re-attested every window pass) and the
-# zero-dependency default of the curation chain; the trained tier is
-# q_li1 + the composed q_x9. The standalone census row keeps its full
-# generated oracle in the archive.)
 
 
 _X7_STOPS = "'the','a','of','and','to','in','is','it'"
@@ -1222,10 +1048,6 @@ def _x9_gate(spark, sf_dir, model):
     )
 
 
-# (q_x5 repetition stats: RETIRED r7 — strictly subsumed by q_gq1's
-# full 13-signal Gopher repetition battery.)
-
-
 _PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 _PII_NUM = r"[0-9]{9,}"
 
@@ -1410,11 +1232,9 @@ def q_x8(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     deduped = dedup.line_dedup(docs, sep="value")
-    try:  # consumed by bm25's stats + scoring branches AND the final
-        # text join — materialize the dedup result once (lazy)
-        deduped = deduped.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001
-        pass
+    # consumed by bm25's stats + scoring branches AND the final text
+    # join — materialize the dedup result once (lazy)
+    deduped = deduped.localCheckpoint(eager=False)
     scored = bm25_scores(deduped, ["join", "hash", "scan"])
     joined = scored.join(docs.select("doc_id", "lang"), "doc_id")
     capped = sampling.cap_per_group(
@@ -1429,14 +1249,6 @@ def q_x8(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Deduplication (LLM-pipeline extension)
 # ---------------------------------------------------------------------------
-
-
-# (q_d1_exact_dedup: RETIRED r10 -> electrician_spark.retired, making
-# room for the mid-round q_wm1 watermark row. The exact-dedup
-# fingerprint groupBy is the FIRST STAGE of every live dedup row
-# (q_d3 signatures, q_id1 exact probe, the q_x8 line-dedup agg), and
-# the corpus-stats shape lives in q_pr1's profile; exact_dedup keeps
-# its test_dedup pins.)
 
 
 _SQL_JACCARD_CTES = (
@@ -1522,61 +1334,9 @@ def q_d6(spark, sf_dir):
     return dedup.connected_components(pairs).orderBy("node")
 
 
-# (q_d7_canonical_docs: RETIRED r8 -> electrician_spark.retired. cluster CC
-# attested by q_d6_dup_clusters, the anti-join materialization shape by
-# q_j5_anti_join, the containment probe by q_d8/q_bl1.)
-
-
-# (q_d8_decontaminate: RETIRED r10 -> electrician_spark.retired,
-# making room for the mid-round q_lr1 longest-repeated-run row.
-# Decontamination stays live via q_bl1 (the bloom-prefiltered form:
-# same shingle containment, exact verify on candidates, PLUS the
-# zero-corpus-shuffle filter) and q_id1's incremental exact probe;
-# dedup.contamination_scores/decontaminate keep their test_dedup pins.)
-
-
 # Deterministic md5-derived sample key, identical in Spark
 # (conv(substring(md5, 1, 8), 16, 10)) and DuckDB:
 _SQL_SAMPLE_KEY = "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)"
-
-
-# (q_sm1_stratified_sample: RETIRED r8 -> electrician_spark.retired. the
-# md5-key threshold is q_sm2_hash_sample; per-group quota ranking is the
-# salted two-phase top-k q_x8's cap_per_group attests.)
-
-
-# (q_sm2_hash_sample: RETIRED r10 -> electrician_spark.retired. The
-# md5-threshold Bernoulli filter stays live inside q_sv1 (split
-# assignment), q_dm1 (per-domain rates), and q_ir1 (hashed-model
-# scoring keys); sampling.hash_sample keeps its test_sampling
-# equivalence pins.)
-
-
-_MIXTURE_RATES = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.1}
-
-
-def _mixture_oracle() -> str:
-    cases = " ".join(
-        f"WHEN '{d}' THEN {int(r * (1 << 32))}" for d, r in sorted(_MIXTURE_RATES.items())
-    )
-    default = int(0.05 * (1 << 32))
-    return (
-        f"SELECT doc_id, source FROM documents WHERE {_SQL_SAMPLE_KEY} < "
-        f"(CASE source {cases} ELSE {default} END)"
-    )
-
-
-# (q_sm3 mixture sample: RETIRED r7 — the md5-threshold filter shape
-# stays attested via q_sm2, the per-domain rate arithmetic via
-# q_dm1.)
-
-
-
-
-# (q_sm4 weighted sample: RETIRED r7 — the md5-threshold inclusion
-# filter stays attested via q_sm2, the rate arithmetic via q_dm1 and
-# q_es1; sampling.weighted_bernoulli_sample keeps its test_sampling
-# equivalence pins.)
 
 
 @query(
@@ -1863,11 +1623,6 @@ def q_n1(spark, sf_dir):
     return out.withColumn("rank", F.col("rank").cast("long")).orderBy("query_id", "rank")
 
 
-# (q_n2_ann_ivf: RETIRED r8 -> electrician_spark.retired. labeled-IVF routing
-# is subsumed by q_n3_ann_ivf_kmeans (k-means bootstrap routing) +
-# q_n4_ann_ivf_probes (multi-probe recall).)
-
-
 @query(
     "q_n4_ann_ivf_probes",
     "WITH ex AS (SELECT label AS cl, d.dim AS dim, CAST(embedding[d.dim + 1] AS DOUBLE) AS v "
@@ -1995,12 +1750,6 @@ def q_n3(spark, sf_dir):
     return out.withColumn("rank", F.col("rank").cast("long")).orderBy("query_id", "rank")
 
 
-# (q_e1_quantize_embeddings: RETIRED r9 -> electrician_spark.retired. the
-# quantization family is attested live at three rungs — PQ ADC (q_pq1),
-# IVF-PQ (q_pq2), binary sign-bit (q_bq1); int8 scalar codes keep their
-# test_quantize bit-exactness pins.)
-
-
 # ---------------------------------------------------------------------------
 # §2.11 Sinks — round-trip and upsert semantics
 # ---------------------------------------------------------------------------
@@ -2051,12 +1800,6 @@ def q_k2(spark, sf_dir):
     )
 
 
-# (q_k6_csv_roundtrip: RETIRED r9 -> electrician_spark.retired. the
-# sink round-trip shape stays live on THREE formats: q_k1 parquet, q_k2
-# NDJSON, and the new q_or1 ORC row; CSV schema/options test-pinned in
-# test_io.)
-
-
 @query(
     "q_k4_upsert_idempotent",
     "SELECT count(*) AS n_rows, count(DISTINCT o_custkey) AS n_keys FROM "
@@ -2073,15 +1816,6 @@ def q_k4(spark, sf_dir):
     return final.agg(
         F.count("*").alias("n_rows"), F.countDistinct("o_custkey").alias("n_keys")
     )
-
-
-# (q_k3_kafka_frame_roundtrip: RETIRED r15 → electrician_spark.retired.
-# The K3 frame contract it attested through a FILE stand-in is now
-# driven through the fake broker's real produce path by TWO live rows:
-# q_kc1 (template keys, crc32 partitioning, paced consume) and q_kt1
-# (sorted produce + timestamp-start replay) — strictly harder
-# attestations of the same kafka_frame machinery; header-template
-# transport stays pinned in test_kafka_fake.)
 
 
 @query(
@@ -2310,12 +2044,6 @@ def q_kt1(spark, sf_dir):
     )
 
 
-# (q_k5 executed upsert: RETIRED r7 — K4 stays attested via q_k4's
-# Derby-executed idempotent MERGE; q_k5 was the one registry row with
-# a driver-side collect feeding DuckDB, flagged in the r6 verdict as
-# a pattern to keep out of user-facing examples.)
-
-
 # ---------------------------------------------------------------------------
 # §2.7 W9 / §3.3 — custom stateful streaming (applyInPandasWithState)
 # ---------------------------------------------------------------------------
@@ -2367,39 +2095,6 @@ def q_r1(spark, sf_dir):
     )
     await_stream(q, 180)
     return spark.table(name).orderBy("key", "seq")
-
-
-# ---------------------------------------------------------------------------
-# §2.10 DSP pack — the SQL-expressible subset gets oracle checks
-# (FFT/Haar keep analytic-identity tests in tests/test_dsp.py instead)
-# ---------------------------------------------------------------------------
-
-
-def _zeros_like(vec):
-    return F.transform(vec, lambda _: F.lit(0.0))
-
-
-def _as_doubles(col_name: str):
-    return F.col(col_name).cast("array<double>")
-
-
-# (q_p1_signal_energy: RETIRED r8 -> electrician_spark.retired. TotalEnergy is
-# a sub-computation of q_p2_snr's signal/noise energies (same dsp.energy fold
-# on both sides).)
-
-
-# (q_p2_snr: RETIRED r10 -> electrician_spark.retired. The DSP energy
-# fold + log10 ratio shape stays live via q_p3 (wave roundtrip energy)
-# and q_aq1 (audio quality battery's SNR-style signals); functions/dsp
-# keeps its Parseval/golden identity pins in test_dsp.)
-
-
-# (q_p3_wave_roundtrip: RETIRED r12 -> electrician_spark.retired,
-# making room for q_pb1's protobuf relay-envelope codec row. The WAV
-# binary codec stays live via q_af1 (audio fingerprint) and q_aq1
-# (audio quality battery), both of which parse real WAV fixtures on
-# every driver pass; the encode->decode->energy identity keeps its
-# archive oracle plus the test_codecs/test_dsp pins.)
 
 
 # ---------------------------------------------------------------------------
@@ -2477,42 +2172,11 @@ def q_sk2(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# (q_m1 media features: RETIRED r7 — its decode output was the
-# DOCUMENTED sha-derived stub; the binary-column path is now attested
-# by three REAL-decode rows (q_px1 pixels, q_rz1 resample, q_vf1 video
-# frames) and extract_features keeps its test_multimodal pins.)
-
-
-# (q_vf1_video_frames: RETIRED r9 -> electrician_spark.retired. the
-# REAL-decode media stack stays live via q_px1 (pixel stats), q_rz1
-# (resize), and the new q_ah1 hash family; the AVI/MJPEG frame walk
-# keeps its test_multimodal closed-form pins.)
-
-
 # ---------------------------------------------------------------------------
 # Families previously covered only by local tests — tagger, map headers,
 # blackout / TTL windows, retry semantics, compression codecs — each now
 # with a driver-gated oracle row.
 # ---------------------------------------------------------------------------
-
-
-# (q_t6_tagger: RETIRED r10 -> electrician_spark.retired, making room
-# for the mid-round q_rt1 rate-limit timeout row. The conditional
-# array-append tag shape stays live via q_t5's classify CASE chain and
-# the q_x7 pipeline composition; sf.tag_when keeps its test_pipeline
-# pins.)
-
-
-# (q_fm1_headers_map: RETIRED r9 -> electrician_spark.retired. map
-# construction/access archived; struct/array assembly machinery stays
-# live via q_cml1's message structs and q_gq1's feature arrays, JSON
-# field access via q_f5.)
-
-
-# (q_w5_blackout_filter: RETIRED r9 -> electrician_spark.retired. the
-# time-gated drop shape stays live via q_w7_ttl_expiry (the full
-# wrap->TTL->unwrap stack); wall-clock blackout logic test-pinned in
-# test_streaming.)
 
 
 @query(
@@ -2582,14 +2246,6 @@ def q_r2(spark, sf_dir):
         F.lit(",".join(str(d) for d in delays)).alias("backoff_schedule"),
         F.count("*").alias("n_errors"),
     )
-
-
-# (q_r4 retry table: RETIRED r7 — its oracle pinned only literal
-# priority/retry-count columns over an attested filter shape; the
-# retry FAMILY stays attested via q_r2's executed backoff schedule and
-# the priority path via q_o3's drain. to_retry_table keeps its
-# test_reliability pins. Slot went to q_ir1 DSIR importance
-# resampling, a new operator with a full value oracle.)
 
 
 @query(
@@ -2712,15 +2368,8 @@ def q_ht1(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-6 curation rows: the r5 operators promoted from test-pinned to
-# driver-attested (chunking, LM perplexity buckets, domain mixture +
-# temperature rates, SemDeDup, exact substring dedup). Each replaced a
-# retired redundant sibling to keep the 100-query / 2-window driver
-# arithmetic (retired: q_s4 cursor scan — S5 stays attested via q_s2;
-# q_t1 identity projection — attested by every multi-stage query;
-# q_u1 UNION ALL — q_u2/u3/u4 keep the set-op family; q_x1 token stats
-# — token counting attested via q_x2 ratios + q_x8 BPE counts; q_x4
-# fingerprint — the fingerprint function is what q_d1 groups by).
+# Curation rows: chunking, LM perplexity buckets, domain mixture +
+# temperature rates, SemDeDup.
 # ---------------------------------------------------------------------------
 
 
@@ -2760,15 +2409,6 @@ def q_ch1(spark, sf_dir):
         F.col("chunk_tokens").cast("long").alias("chunk_tokens"),
         "chunk_text",
     ).orderBy("doc_id", "chunk_id")
-
-
-# (q_lm1_perplexity_buckets: RETIRED r12 -> electrician_spark.retired,
-# making room for q_x9's trained-gate curation pipeline row. The
-# LM-quality bucketing capability stays live via q_lm2 (bigram
-# Stupid-Backoff + the PRODUCTION approxQuantile bucket path, attested
-# r11); the unigram-LM scoring machinery itself stays live inside
-# q_lm2's pipeline and the exact-NTILE replay keeps its full oracle in
-# the archive plus the test_lmquality pins.)
 
 
 @query(
@@ -2871,32 +2511,9 @@ def q_sd1(spark, sf_dir):
     return out.select("vec_id", "label").orderBy("vec_id")
 
 
-# (q_ss1_substring_dedup: RETIRED r10 -> electrician_spark.retired.
-# Exact substring dedup stays live via q_sa1_suffix_spans (the
-# suffix-doubling detection core, maximal-span exact recovery) and the
-# line-dedup agg inside q_x8; strip_repeated_ngrams keeps its full
-# plain-Python replay pins in test_dedup and the SA-equivalence pin in
-# test_suffixarray.)
-
-
 # ---------------------------------------------------------------------------
-# Round-7 promotion rows: the r6 operators promoted from test-pinned to
-# driver-attested (PQ ADC search, IVF-PQ, best-fit packing, reproducible
-# shard export, bigram Stupid-Backoff LM + the production approxQuantile
-# bucket path, deterministic epoch shuffle, Gopher quality+repetition
-# battery). Each replaced a retired redundant sibling to keep the
-# 100-query / 2-window driver arithmetic (retired: q_a4 count-distinct —
-# distinct counting stays attested via q_ds1 + q_pr1, A1 via q_a1; q_a5
-# peak rate — the agg-of-agg shape via q_o1, A2 via q_a2; q_a6
-# grouped stats — the grouped-avg shape via q_a1/q_q1, A3 via q_a3;
-# q_x5 repetition stats — strictly subsumed by q_gq1's full 13-signal
-# battery; q_sm3 mixture sample — the md5-threshold filter via
-# q_sm2, the domain-rate arithmetic via q_dm1; q_k5 executed
-# upsert — K4 stays attested via q_k4's Derby-executed idempotent MERGE,
-# and q_k5 was the one row with a driver-side collect feeding DuckDB;
-# q_wf3 running sum — the ROWS UNBOUNDED PRECEDING frame is the exact
-# window q_sp1's pack cumsum attests, WF3's lag/rank siblings stay via
-# q_wf2/q_wf4).
+# PQ ADC search, bigram Stupid-Backoff LM with approxQuantile buckets,
+# the Gopher quality and repetition battery.
 # ---------------------------------------------------------------------------
 
 # PQ constants shared by the Spark queries and the SQL replays:
@@ -2980,36 +2597,11 @@ def q_pq1(spark, sf_dir):
     return out.withColumn("rank", F.col("rank").cast("long")).orderBy("query_id", "rank")
 
 
-# (q_pq2_ivfpq_topk: RETIRED r11 -> electrician_spark.retired, making
-# room for q_ab1's threshold-abort row. IVF-PQ is the COMPOSITION of
-# two independently-live attestations — PQ/ADC scoring via q_pq1 and
-# IVF cell routing via q_n3/q_n4 — and the composed kernel keeps its
-# full oracle in the archive plus its recall/subset contracts in
-# test_quantize.)
-
-
-# (q_pk2_best_fit_packing: RETIRED r9 -> electrician_spark.retired. the
-# packing family keeps two live rows — q_sp1's greedy cumsum pack and
-# q_lb1's length-grouped batcher; the best-fit bin-search kernel keeps
-# its test_packing reference-equality pins.)
-
-
 _SQL_EPOCH_KEY = (
     "CAST('0x' || substr(md5('{seed}:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)"
 )
 
 
-# (q_sh1_training_shards: RETIRED r9 -> electrician_spark.retired. the
-# reproducible shard-export machinery (epoch key -> shard -> ordered
-# write -> sha256 manifest -> verify) stays live via q_wd1's WebDataset
-# tar form and q_sv1's split manifests; the NDJSON shard form keeps its
-# test_io pins.)
-
-
-# (q_es1_epoch_shuffle: RETIRED r9 -> electrician_spark.retired. the
-# md5 epoch-key + shard_of + within-shard order machinery is live in
-# THREE rows: q_sh1 training shards, q_wd1 webdataset export, and
-# q_lb1's seed-keyed batch order.)
 _SQL_LM_TOKENS = (
     "list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x <> '')"
 )
@@ -3315,12 +2907,6 @@ def q_gq1(spark, sf_dir):
         )
         .orderBy("lang")
     )
-# ---------------------------------------------------------------------------
-# Round-8 promotions: test-pinned operators elevated to driver-attested
-# oracle rows (r7 verdict items 2/8). Each replaced a RETIRED redundant
-# sibling from the r6 window (rationale at each retirement site; the
-# retired row itself stays runnable in electrician_spark.retired).
-# ---------------------------------------------------------------------------
 
 
 @query(
@@ -3833,17 +3419,14 @@ def q_id1(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") <= 900)
     index = incremental.build_dedup_index(docs.filter(F.col("doc_id") % 3 != 0))
-    try:
-        # The operator's contract reads the index as a PERSISTED table
-        # (scanned by three probes, shuffled never). Here the index is
-        # derived in-query, so materialize it once — without this the
-        # three probes each re-run the scan→shingle→16-md5-min build
-        # pipeline (r15: 2.55→2.25 s median at sf0.1, interleaved).
-        # The operator itself must NOT checkpoint: a real 10^10-row
-        # stored index is already materialized storage (guide §5).
-        index = index.localCheckpoint()
-    except Exception:  # noqa: BLE001
-        pass
+    # The operator's contract reads the index as a PERSISTED table
+    # (scanned by three probes, shuffled never). Here the index is
+    # derived in-query, so materialize it once — without this the
+    # three probes each re-run the scan→shingle→16-md5-min build
+    # pipeline (2.55→2.25 s median at sf0.1, interleaved).
+    # The operator itself must NOT checkpoint: a real 10^10-row
+    # stored index is already materialized storage (guide §5).
+    index = index.localCheckpoint()
     batch = docs.filter(F.col("doc_id") % 3 == 0)
     return (
         incremental.incremental_dedup(batch, index)
@@ -3915,13 +3498,7 @@ def q_rs1(spark, sf_dir):
     )
     delivered = stateful.resequence(stream, "key", "seq", "payload")
     name = "q_rs1_sink_" + os.path.basename(tmp).replace("q_rs1_", "")
-    # State-partition count is captured from the session conf at query
-    # start; 7 keys under a default 200-partition session means 600
-    # near-empty state tasks across the three micro-batches (measured
-    # 36 s vs 8 s). Scope the override to this query and restore.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             delivered.writeStream.format("memory")
             .queryName(name)
@@ -3931,17 +3508,7 @@ def q_rs1(spark, sf_dir):
             .start()
         )
         await_stream(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name).select("key", "seq", "payload").orderBy("key", "seq")
-
-
-
-# ---------------------------------------------------------------------------
-# Round-9 promotions — test-pinned operators elevated to driver-attested
-# oracle rows (r8 verdict items 1/2/6/7/8). Each new row retired one
-# redundant r7-window sibling into electrician_spark.retired.
-# ---------------------------------------------------------------------------
 
 
 # WordPiece: the training mini-corpus is a LITERAL (sf-independent), so
@@ -4236,14 +3803,6 @@ def q_bq1(spark, sf_dir):
     )
 
 
-# (q_ah1_image_hash_family: RETIRED r11 -> electrician_spark.retired,
-# making room for q_li1's model-based language-ID row. Perceptual
-# image hashing stays live via q_ph1 (DCT pHash — the hardest family
-# member); the aHash/dHash one-decode-pass family keeps its full
-# closed-form oracle in the archive and its kernels in
-# test_multimodal.)
-
-
 @query(
     "q_cml1_chatml_render",
     # ChatML SFT rendering with loss-mask spans, attested two ways at
@@ -4446,12 +4005,7 @@ def q_rl1(spark, sf_dir):
     )
     gated = stateful.rate_limit(stream, capacity=5.0, refill_per_sec=0.5)
     name = "q_rl1_sink_" + os.path.basename(tmp).replace("q_rl1_", "")
-    # Same state-partition scoping as q_rs1: 3 keys under a default
-    # 200-partition session would spawn hundreds of near-empty state
-    # tasks per micro-batch.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             gated.writeStream.format("memory")
             .queryName(name)
@@ -4461,8 +4015,6 @@ def q_rl1(spark, sf_dir):
             .start()
         )
         await_stream(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         spark.table(name)
         .select("key", "event_time_s", "payload", "admitted")
@@ -4659,10 +4211,7 @@ def q_af1(spark, sf_dir):
     # same five-branch fan-out as q_ph1, and here every unmaterialized
     # branch re-ran the pure-Python tone synthesis (~300k sin() calls)
     # plus PCM decode + rFFT — five times (guide §2.4; bounded).
-    try:
-        sig = sig.localCheckpoint(eager=False)
-    except Exception:  # noqa: BLE001 — e.g. Spark Connect; recompute
-        pass
+    sig = sig.localCheckpoint(eager=False)
     pairs = dedup.hamming_pairs(sig, "media_id", "afp", max_hamming=1)
     near = (
         pairs.select(F.col("id_a").alias("media_id"))
@@ -5666,9 +5215,7 @@ def q_ev1(spark, sf_dir):
     # for drain_timeout_query; a missing flush leaves the sink short
     # and the oracle compare red.
     n_expected = a.count() + b.count()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             out.writeStream.format("memory")
             .queryName(name)
@@ -5680,8 +5227,6 @@ def q_ev1(spark, sf_dir):
         stateful.drain_timeout_query(
             q, lambda: spark.table(name).count() >= n_expected
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name).select("key", "seq", "payload").orderBy("key", "seq")
 
 
@@ -5858,9 +5403,7 @@ def q_rt1(spark, sf_dir):
         tagged, capacity=5.0, refill_per_sec=0.0, idle_timeout_ms=1
     )
     name = "q_rt1_sink_" + os.path.basename(tmp).replace("q_rt1_", "")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             out.writeStream.format("memory")
             .queryName(name)
@@ -5872,8 +5415,6 @@ def q_rt1(spark, sf_dir):
         stateful.drain_timeout_query(
             q, lambda: spark.table(name).count() >= 30
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     res = spark.table(name)
     split = F.split(F.col("payload"), r"\|", 2)
     return res.select(
@@ -6015,9 +5556,7 @@ def q_wm1(spark, sf_dir):
         )
     )
     name = "q_wm1_sink_" + os.path.basename(tmp).replace("q_wm1_", "")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -6027,8 +5566,6 @@ def q_wm1(spark, sf_dir):
             .start()
         )
         await_stream(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         spark.table(name)
         .select(
@@ -6044,8 +5581,7 @@ def q_wm1(spark, sf_dir):
 
 @query(
     "q_dw1_dedupe_within_watermark",
-    # W8's TRUE STREAMING form (q_w8's batch dropDuplicates is
-    # archived): dropDuplicatesWithinWatermark on a REAL five-micro-
+    # W8's streaming form: dropDuplicatesWithinWatermark on a REAL five-micro-
     # batch stream attests all three state behaviors at once:
     # (a) DROP — a duplicate key arriving while the key's state is
     # retained (id 3, and id 8 after the eviction wave) never reaches
@@ -6127,9 +5663,7 @@ def q_dw1(spark, sf_dir):
     )
     out = swin.dedupe_within_watermark(stream, ["key"], "ts", "10 minutes")
     name = "q_dw1_sink_" + os.path.basename(tmp).replace("q_dw1_", "")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             out.writeStream.format("memory")
             .queryName(name)
@@ -6139,8 +5673,6 @@ def q_dw1(spark, sf_dir):
             .start()
         )
         await_stream(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (
         spark.table(name)
         .select(
@@ -6356,9 +5888,7 @@ def q_se1(spark, sf_dir):
         ),
     )
     name = "q_se1_sink_" + os.path.basename(tmp).replace("q_se1_", "")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             enriched.writeStream.format("memory")
             .queryName(name)
@@ -6368,8 +5898,6 @@ def q_se1(spark, sf_dir):
             .start()
         )
         await_stream(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name).orderBy("o_orderkey")
 
 
@@ -6514,9 +6042,7 @@ def q_sj1(spark, sf_dir):
         (F.col("r_ts").cast("long") - F.col("l_ts").cast("long")).alias("dt_sec"),
     )
     name = "q_sj1_sink_" + os.path.basename(tmp).replace("q_sj1_", "")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             joined.writeStream.format("memory")
             .queryName(name)
@@ -6526,8 +6052,6 @@ def q_sj1(spark, sf_dir):
             .start()
         )
         await_stream(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name).orderBy("key")
 
 
@@ -6588,9 +6112,7 @@ def q_sj2(spark, sf_dir):
         (F.col("r_ts").cast("long") - F.col("l_ts").cast("long")).alias("dt_sec"),
     )
     name = "q_sj2_sink_" + os.path.basename(tmp).replace("q_sj2_", "")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _state_partitions(spark):
         q = (
             joined.writeStream.format("memory")
             .queryName(name)
@@ -6600,6 +6122,4 @@ def q_sj2(spark, sf_dir):
             .start()
         )
         await_stream(q, 300)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name).orderBy("key")

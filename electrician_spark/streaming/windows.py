@@ -66,23 +66,3 @@ def dedupe_within_watermark(
     stream) grows state forever and is the classic streaming OOM."""
     return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
 
-
-def dedupe(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Key-based dedup (reference W8 dedupe_key,
-    proto/electrician_relay.proto:33). Batch form: dropDuplicates; the
-    streaming form with bounded state is
-    :func:`dedupe_within_watermark`."""
-    return df.dropDuplicates(keys)
-
-
-def ordered_replay_summary(df: DataFrame, key_col: str, seq_col: str) -> DataFrame:
-    """Per-key ordering check (reference W9 ordering_key + seq,
-    forwardrelay/submit.go:29): first/last seq and count per key.
-    At scale: repartition(key) + sortWithinPartitions(seq) before an
-    order-sensitive sink preserves per-key order — Spark only guarantees
-    intra-partition order."""
-    return df.groupBy(key_col).agg(
-        F.min(seq_col).alias("first_seq"),
-        F.max(seq_col).alias("last_seq"),
-        F.count("*").alias("n"),
-    )

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from electrician_spark.functions import dsp
+from tests.conftest import SF_ORACLE
 
 N = 256
 SAMPLE_RATE = 256.0
@@ -93,6 +94,36 @@ def test_top_peaks(waves):
     assert out[2][0].freq == pytest.approx(32.0)
     assert out[2][1].freq == pytest.approx(8.0)
     assert len(out[1]) == 2
+
+
+def test_energy_is_a_sequential_fold(spark):
+    """``dsp.energy`` folds left to right, the associativity of DuckDB's
+    ``list_sum``: over the embedding fixture it equals the plain
+    float64 loop bit for bit, with and without an imaginary part."""
+    import pyarrow.parquet as pq
+
+    path = f"{SF_ORACLE}/embeddings.parquet"
+    emb = spark.read.parquet(path).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("re")
+    )
+    im = F.reverse("re")
+    got = {
+        r.vec_id: (r.e, r.e_c)
+        for r in emb.select(
+            "vec_id",
+            dsp.energy(F.col("re")).alias("e"),
+            dsp.energy(F.col("re"), im).alias("e_c"),
+        ).collect()
+    }
+    t = pq.read_table(path, columns=["vec_id", "embedding"]).to_pydict()
+    want = {}
+    for vid, xs in zip(t["vec_id"], t["embedding"]):
+        e = e_c = 0.0
+        for x, y in zip(xs, reversed(xs)):
+            e += x * x
+            e_c += x * x + y * y
+        want[vid] = (e, e_c)
+    assert got == want
 
 
 def test_snr_known_ratio(spark):

@@ -114,6 +114,18 @@ def test_unigram_lm_is_materialized_once(spark):
     assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan
 
 
+def test_model_frames_are_local_relations(spark):
+    """The model tables are built on the driver and must plan as Arrow
+    local relations: a Python-RDD frame (``Scan ExistingRDD``) would
+    start Python workers on every read of the model."""
+    ref = spark.createDataFrame([(s,) for s in REF_CORPUS], ["text"])
+    models = [lmq.unigram_lm(ref, alpha=ALPHA), *lmq.bigram_lm(ref, alpha=ALPHA)]
+    for model in models:
+        model.collect()
+        plan = model._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan, plan
+
+
 # --- bigram Stupid Backoff -------------------------------------------------
 
 

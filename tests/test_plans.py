@@ -14,17 +14,10 @@ import contextlib
 
 import pytest
 
+from pyspark.sql import functions as F
+
+from electrician_spark.io import read_table
 from electrician_spark.queries import REGISTRY
-
-
-def _q(name: str):
-    """Live-or-archived lookup: plan pins outlive a row's retirement —
-    the operator still ships, so its plan contract still holds."""
-    if name in REGISTRY:
-        return REGISTRY[name]
-    from electrician_spark.retired import RETIRED_REGISTRY
-
-    return RETIRED_REGISTRY[name]
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -42,7 +35,7 @@ def plans(spark):
 
     def get(name: str) -> str:
         if name not in cache:
-            cache[name] = plan_of(_q(name).spark(spark, SF_DIR))
+            cache[name] = plan_of(REGISTRY[name].spark(spark, SF_DIR))
         return cache[name]
 
     return get
@@ -75,8 +68,36 @@ def test_filter_pushdown_under_join(plans):
     assert "GreaterThan(l_shipdate," in p
 
 
-def test_regional_revenue_plan_shape(plans):
-    p = plans("q_j7_regional_revenue")
+def _regional_revenue(spark):
+    """TPC-H Q5 shape: customer/orders/lineitem/supplier shuffle-join on
+    their keys, nation and region are broadcast dims."""
+    t = lambda name: read_table(spark, SF_DIR, name)  # noqa: E731
+    cust = t("customer").select("c_custkey", "c_nationkey")
+    orders = t("orders").filter(
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
+    ).select("o_orderkey", "o_custkey")
+    li = t("lineitem").select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
+    supp = t("supplier").select("s_suppkey", "s_nationkey")
+    nation = t("nation")
+    region = t("region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
+    joined = (
+        cust.join(orders, cust.c_custkey == orders.o_custkey)
+        .join(li, li.l_orderkey == orders.o_orderkey)
+        .join(supp, (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey))
+        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
+        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+    )
+    revenue = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    return (
+        joined.groupBy("n_name")
+        .agg(F.round(revenue, 2).alias("revenue"))
+        .orderBy(F.col("revenue").desc(), "n_name")
+    )
+
+
+def test_regional_revenue_plan_shape(spark):
+    p = plan_of(_regional_revenue(spark))
     # date range pushed to the orders scan, region filter to its scan
     assert "GreaterThanOrEqual(o_orderdate" in p
     assert "In(r_name" in p
@@ -90,15 +111,10 @@ def test_regional_revenue_plan_shape(plans):
 
 
 def test_topk_avoids_global_sort(plans):
-    # q_o1 retired r8 (archived); q_s3 carries the same
-    # TakeOrderedAndProject pin on the live surface.
     assert "TakeOrderedAndProject" in plans("q_s3_predicate_pushdown")
 
 
 def test_revenue_filter_pushed(plans):
-    # q_t1 retired in r6 (identity projection — redundant with every
-    # multi-stage query); q_j2 carries the same shipdate-filter-under-
-    # join pushdown and keeps the pin.
     p = plans("q_j2_shipping_priority")
     assert "LessThan(o_orderdate" in p or "GreaterThan(l_shipdate" in p, p
 
@@ -155,8 +171,7 @@ _BNLJ_ALLOWED = {
     # domain_mixture's share join: one total-count row broadcast over
     # the bounded domain census (same sanctioned single-row shape).
     "q_dm1_domain_mixture",
-    # lm_score's single-row OOV bounds join rode here via q_lm1 until
-    # its r12 retirement; lm_score_bigram carries the same shape live.
+    # lm_score_bigram's single-row OOV bounds join.
     "q_lm2_bigram_buckets",
     # dsir_select's in-plan model totals (r15): the two ONE-row fit
     # totals cross-join onto the llr table and the unseen-bucket
@@ -198,27 +213,37 @@ def test_lsh_near_dup_gemm_is_bucket_local(plans):
     assert "SortMergeJoin" not in p  # grid joins broadcast; dedup agg is hash
 
 
+def _strip_repeated_ngrams(spark, sf_dir):
+    from electrician_spark.operators import dedup
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return dedup.strip_repeated_ngrams(docs, min_len=8).orderBy("doc_id")
+
+
 def test_single_scan_materialization_postures(spark, monkeypatch):
     """One-scan pins: operators whose branches defeat ReuseExchange
     (differing column pruning) materialize their shared input once —
     the executed plan must show ZERO parquet scans with the branches
-    replaying cached RDDs. Covers: substring dedup (q_ss1:
-    fingerprints + token explode + doc roster), the blocked-GEMM pa/pb
-    grid joins (q_d5, q_d9), and q_d2, whose per-document shingle
-    arrays feed the prefix probe, the prefix broadcast and the verify
+    replaying cached RDDs. Covers: substring dedup
+    (``strip_repeated_ngrams``: fingerprints + token explode + doc
+    roster), the blocked-GEMM pa/pb grid joins (q_d5, q_d9: both sides
+    replay the bucketed rows, and the driver-built block grid is a local
+    relation on each side), and q_d2, whose per-document shingle arrays
+    feed the prefix probe, the prefix broadcast and the verify
     broadcast."""
     expect = {
-        "q_ss1_substring_dedup": 4,
-        "q_d5_embedding_near_dup": 2,
-        "q_d9_lsh_near_dup": 2,
+        "strip_repeated_ngrams": (_strip_repeated_ngrams, 4, 0),
+        "q_d5_embedding_near_dup": (REGISTRY["q_d5_embedding_near_dup"].spark, 2, 2),
+        "q_d9_lsh_near_dup": (REGISTRY["q_d9_lsh_near_dup"].spark, 2, 2),
     }
-    for name, min_replays in expect.items():
-        df = _q(name).spark(spark, SF_DIR)
+    for name, (build, min_replays, grid_scans) in expect.items():
+        df = build(spark, SF_DIR)
         df.collect()
         p = df._jdf.queryExecution().executedPlan().toString()
         final = p.split("== Initial Plan ==")[0]
         assert final.count("FileScan parquet") == 0, (name, final)
         assert final.count("Scan ExistingRDD") >= min_replays, (name, final)
+        assert final.count("LocalTableScan") >= grid_scans, (name, final)
 
     import re
 
@@ -232,7 +257,7 @@ def test_single_scan_materialization_postures(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(cls, "localCheckpoint", recording)
-    df = _q("q_d2_ngram_jaccard").spark(spark, SF_DIR)
+    df = REGISTRY["q_d2_ngram_jaccard"].spark(spark, SF_DIR)
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString().split(
         "== Initial Plan =="
@@ -274,12 +299,10 @@ def test_minhash_single_tokenize_pass(spark):
 
 def test_no_unsanctioned_global_windows():
     """A `Window.orderBy(...)` with no partitionBy is a single-reducer
-    global sort — the one window shape that cannot scale. Exactly two
-    sites are sanctioned: the suffix-array COMPACT regime (bounded to
-    <=1M positions by an enforced regime gate, deliberately one
-    pipelined partition) and the archived q_lm1 exact-NTILE oracle
-    form (retired.py — the production path uses approxQuantile
-    instead). Any new partition-less window must either be bounded the
+    global sort — the one window shape that cannot scale. One site is
+    sanctioned: the suffix-array COMPACT regime (bounded to <=1M
+    positions by an enforced regime gate, deliberately one pipelined
+    partition). Any new partition-less window must either be bounded the
     same way and added here with its rationale, or be rewritten."""
     import os
     import re
@@ -288,7 +311,7 @@ def test_no_unsanctioned_global_windows():
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "electrician_spark",
     )
-    sanctioned = {"operators/suffixarray.py", "retired.py"}
+    sanctioned = {"operators/suffixarray.py"}
     offenders = []
     for dirpath, _dirs, files in os.walk(root):
         for fn in files:
@@ -334,16 +357,18 @@ def test_chunk_documents_query_no_shuffle(plans):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
-def test_substring_dedup_fingerprint_agg_is_partial(plans):
-    """q_ss1 (archived) and its suffix-doubling successor q_sa1: the
+def test_substring_dedup_fingerprint_agg_is_partial(spark, plans):
+    """``strip_repeated_ngrams`` and the suffix-doubling q_sa1: the
     corpus-wide window-fingerprint groupBy must keep map-side partial
     aggregation — a boilerplate window present in millions of
     documents has to collapse per partition before the exchange, or
     the shuffle carries the whole site stream."""
-    for name in ("q_ss1_substring_dedup", "q_sa1_suffix_spans"):
-        p = plans(name)
-        assert "partial_count" in p or "partial" in p, (name, p)
-        assert "CartesianProduct" not in p, name
+    p = plan_of(_strip_repeated_ngrams(spark, SF_DIR))
+    assert "partial_count" in p, p  # the fingerprint count, map-side
+    assert "CartesianProduct" not in p
+    p = plans("q_sa1_suffix_spans")
+    assert "partial_count" in p or "partial" in p, p
+    assert "CartesianProduct" not in p
 
 
 def test_gopher_repetition_battery_is_row_local(spark):

@@ -12,10 +12,16 @@ from pyspark.sql import functions as F
 
 from electrician_spark.io import read_table
 from electrician_spark.reliability import CircuitBreaker
-from electrician_spark.streaming.sinks import Blackout, ForEachBatchRouter, memory_sink
+from electrician_spark.streaming.sinks import (
+    Blackout,
+    ForEachBatchRouter,
+    memory_sink,
+    outside_blackout,
+)
 from electrician_spark.streaming.sources import file_stream, kafka_source_options
-from electrician_spark.streaming.windows import session_counts, tumbling
-from tests.conftest import SF_SMOKE
+from electrician_spark.streaming.windows import session_counts, sliding, tumbling
+from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.oracle_harness import compare, duckdb_conn
 
 
 @pytest.fixture(scope="module")
@@ -59,6 +65,23 @@ def test_streaming_tumbling_equals_batch(spark, events_dir):
         for r in spark.sql("SELECT * FROM t_tumbling").collect()
     }
     assert got == expected
+
+
+def test_sliding_windows_match_sql_replay(spark):
+    """30-minute windows sliding every 15 minutes: every event lands in
+    exactly two windows, counted as DuckDB's two-membership replay."""
+    ev = read_table(spark, SF_ORACLE, "events")
+    got = sliding(ev, "ts", "30 minutes", "15 minutes", F.count("*").alias("n"))
+    start = "make_timestamp(CAST(floor(epoch_us(ts) / 900000000.0) * 900000000 AS BIGINT))"
+    con = duckdb_conn(SF_ORACLE)
+    want = con.execute(
+        f"SELECT window_start, count(*) AS n FROM (SELECT {start} AS window_start FROM events "
+        f"UNION ALL SELECT {start} - INTERVAL 15 MINUTE FROM events) t GROUP BY 1"
+    ).fetchdf()
+    con.close()
+    res = compare("sliding", got, want)
+    assert res.ok, res.detail
+    assert sum(want["n"]) == 2 * ev.count()
 
 
 def test_file_stream_rejects_non_utc_session(spark, events_dir):
@@ -143,6 +166,52 @@ def test_router_blackout_stashes(spark):
     router = ForEachBatchRouter(sinks=[memory_sink(main)], blackout=blackout, stash=memory_sink(stash))
     router(_batch(spark), 0)
     assert main == [] and len(stash) == 3
+
+
+def test_outside_blackout_matches_sql_replay(spark):
+    """The event-time blackout 01:30-03:00 over the events fixture,
+    against DuckDB's whole-second time-of-day replay."""
+    ev = read_table(spark, SF_ORACLE, "events")
+    keep = outside_blackout(F.col("ts"), dt.time(1, 30), dt.time(3, 0))
+    got = ev.filter(keep).groupBy("event_type").agg(F.count("*").alias("n"))
+    sod = "date_part('hour', ts)*3600 + date_part('minute', ts)*60 + date_part('second', ts)"
+    con = duckdb_conn(SF_ORACLE)
+    want = con.execute(
+        f"SELECT event_type, count(*) AS n FROM events "
+        f"WHERE NOT ({sod} >= 5400 AND {sod} < 10800) GROUP BY event_type"
+    ).fetchdf()
+    con.close()
+    res = compare("outside_blackout", got, want)
+    assert res.ok, res.detail
+    assert 0 < res.spark_rows and sum(want["n"]) < ev.count()  # the window drops rows
+
+
+@pytest.mark.parametrize(
+    "start,end",
+    [(dt.time(1, 30), dt.time(3, 0)), (dt.time(23, 0), dt.time(1, 0))],
+    ids=["same_day", "crosses_midnight"],
+)
+def test_outside_blackout_agrees_with_wall_clock_blackout(spark, start, end):
+    """Row-wise ``outside_blackout`` is the negation of
+    ``Blackout.active`` at the same time of day, on both sides of each
+    half-open boundary; sub-second times truncate to the second."""
+    times = [
+        dt.time(0, 0), dt.time(0, 59, 59), dt.time(1, 0), dt.time(1, 29, 59),
+        dt.time(1, 29, 59, 900000), dt.time(1, 30), dt.time(2, 59, 59), dt.time(3, 0),
+        dt.time(12, 0), dt.time(22, 59, 59), dt.time(23, 0), dt.time(23, 59, 59),
+    ]
+    day = dt.date(2024, 1, 2)
+    stamps = [dt.datetime.combine(day, t).isoformat(sep=" ") for t in times]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(stamps)], "i int, s string")
+    got = {
+        r.i: r.keep
+        for r in df.select(
+            "i", outside_blackout(F.to_timestamp("s"), start, end).alias("keep")
+        ).collect()
+    }
+    for i, t in enumerate(times):
+        wall = Blackout(start, end, clock=lambda t=t: dt.datetime.combine(day, t))
+        assert got[i] == (not wall.active()), (start, end, t)
 
 
 def test_router_breaker_reroutes_to_backup(spark):

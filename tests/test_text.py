@@ -32,6 +32,34 @@ def test_redact_all_occurrences(spark):
     assert out == "<EMAIL> <EMAIL>"
 
 
+def test_stopword_ratio_and_avg_token_len_match_sql_replay(spark):
+    """Per-document stopword share and mean token length over the
+    fixture corpus, against DuckDB's list_filter/list_transform replay
+    of the same whitespace split."""
+    from electrician_spark.io import read_table
+    from tests.conftest import SF_ORACLE
+    from tests.oracle_harness import compare, duckdb_conn
+
+    toks = "string_split_regex(trim(text), '\\s+')"
+    stops = ", ".join(f"'{w}'" for w in tx.DEFAULT_STOPWORDS)
+    con = duckdb_conn(SF_ORACLE)
+    want = con.execute(
+        f"SELECT doc_id, round(len(list_filter({toks}, x -> x IN ({stops}))) * 1.0 "
+        f"/ len({toks}), 6) AS stop_ratio, "
+        f"round(list_sum(list_transform({toks}, x -> length(x))) * 1.0 / len({toks}), 6) "
+        "AS avg_tok_len FROM documents"
+    ).fetchdf()
+    con.close()
+    got = read_table(spark, SF_ORACLE, "documents").select(
+        "doc_id",
+        F.round(tx.stopword_ratio(F.col("text")), 6).alias("stop_ratio"),
+        F.round(tx.avg_token_len(F.col("text")), 6).alias("avg_tok_len"),
+    )
+    res = compare("stopword_ratio", got, want)
+    assert res.ok, res.detail
+    assert _one(spark, "the cat and a dog", tx.stopword_ratio(F.col("text"))) == 0.6
+
+
 def test_repetition_fractions(spark):
     df = spark.createDataFrame(
         [("a a a a",), ("a b c d",), ("a b a b",)], ["text"]

@@ -1,10 +1,7 @@
 """Fast iteration checker: run registry queries vs the DuckDB oracle.
 
-Usage: python tools/check.py [--sf DIR] [--archived] [name ...]
-No names = all queries with oracles. --archived runs the retired-row
-archive (electrician_spark.retired) instead of the live registry, so
-SURVEY-declared queries stay verifiable after rotation out of the
-100-slot driver window.
+Usage: python tools/check.py [--sf DIR] [name ...]
+No names = all queries with oracles.
 """
 
 from __future__ import annotations
@@ -25,22 +22,16 @@ from oracle_harness import compare, duckdb_conn  # noqa: E402
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--archived", action="store_true")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    registry = REGISTRY
-    if args.archived:
-        from electrician_spark.retired import RETIRED_REGISTRY
-
-        registry = RETIRED_REGISTRY
-    names = args.names or [n for n, q in registry.items() if q.oracle is not None]
+    names = args.names or [n for n, q in REGISTRY.items() if q.oracle is not None]
     spark = get_session("check", cpus=8, shuffle_partitions=8)
     duck = duckdb_conn(args.sf)
 
     failures = 0
     for name in names:
-        qd = registry[name]
+        qd = REGISTRY[name]
         t0 = time.time()
         try:
             if qd.oracle is None:

@@ -1,10 +1,11 @@
-"""Capture .explain("formatted") for the timed query series into
-plans/r16/<query>_<tag>.txt (tag = before/after).
+"""Write ``.explain("formatted")`` for the timed query series into
+OUT_DIR/<query>.txt, one file per query.
 
-Usage: python tools/r16_plans.py before [name ...]
-       python tools/r16_plans.py after  [name ...]
+Usage: python tools/plans.py OUT_DIR [name ...]
 No names = the 12 bench=True headline queries + the EXTRA_QUERIES
-series from bench.py (the full timed surface).
+series from bench.py (the full timed surface). OUT_DIR is created if
+needed; keep it outside version control (``plans/`` is ignored), and
+capture two directories to compare plans before and after a change.
 """
 
 from __future__ import annotations
@@ -22,17 +23,15 @@ from electrician_spark.queries import REGISTRY  # noqa: E402
 from electrician_spark.session import cpu_budget, get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16")
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or (
-        [n for n, q in REGISTRY.items() if q.bench]
-        + [n for n in EXTRA_QUERIES if n in REGISTRY]
-    )
-    os.makedirs(OUT_DIR, exist_ok=True)
-    spark = get_session("r16-plans", cpus=cpu_budget())
+    if len(sys.argv) < 2:
+        raise SystemExit(__doc__)
+    out_dir = sys.argv[1]
+    names = sys.argv[2:] or ([n for n, q in REGISTRY.items() if q.bench] + EXTRA_QUERIES)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_session("plans", cpus=cpu_budget())
     failures = 0
     for name in names:
         # Same resolution as bench.py: frozen-artifact variants are the
@@ -43,7 +42,7 @@ def main() -> int:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
+            path = os.path.join(out_dir, f"{name}.txt")
             with open(path, "w") as f:
                 f.write(buf.getvalue())
             print(f"wrote {path}")
