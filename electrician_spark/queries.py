@@ -69,14 +69,19 @@ def TS(s: str):
 
 
 @contextmanager
-def _state_partitions(spark: SparkSession, n: int = 8):
+def _state_partitions(spark: SparkSession, n: int = 2):
     """Run a streaming query with ``n`` shuffle (= state) partitions.
 
     A stateful query freezes its state-partition count from the session
-    conf when it starts; a handful of keys under a default 200-partition
-    session means hundreds of near-empty state tasks per micro-batch
-    (q_rs1: 600 state tasks over three micro-batches, 36 s against 8 s).
-    The caller's value is restored on exit, exceptions included."""
+    conf when it starts, so the session's count (200 by default) would
+    mean hundreds of near-empty state tasks per micro-batch for rows
+    that carry a handful of keys. Each state partition costs a task and
+    a state-store commit per micro-batch whatever its rows. Over the nine
+    stateful rows at sf0.1 on 4 cores, the summed median per-batch
+    ``triggerExecution`` read 15.4 s at n=2, 17.0 s at 4 and 22.9 s at 8
+    (3 interleaved reps, identical outputs); n=2 was fastest on eight
+    rows and within 4% on q_ev1. The caller's value is restored on exit,
+    exceptions included."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:

@@ -1,4 +1,5 @@
-"""The Python worker daemon that ``get_session`` installs.
+"""What ``get_session`` installs on the sessions it builds: the Python
+worker daemon, the streaming checkpoint manager and the driver heap.
 
 The zip tests drive :func:`electrician_spark.pyworker.invalidate_caches`
 directly (no Spark). The session test runs a fresh driver process whose
@@ -18,7 +19,7 @@ import zipimport
 
 import pytest
 
-from electrician_spark import pyworker
+from electrician_spark import pyworker, session
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -116,10 +117,14 @@ out["supplied_conf_after"] = [supplied.conf.get(k) for k in keys]
 out["supplied_is_kept"] = same is supplied
 out["supplied_daemon_conf"] = same.sparkContext.getConf().get("spark.python.daemon.module")
 out["supplied_daemons"] = daemons(same)
+ckpt_key = "spark.sql.streaming.checkpointFileManagerClass"
+out["supplied_checkpoint_manager"] = same.conf.get(ckpt_key, None)
 same.stop()
 
 spark = get_session(cpus=2, shuffle_partitions=2)
 out["daemons"] = daemons(spark)
+out["checkpoint_manager"] = spark.conf.get(ckpt_key, None)
+out["driver_memory"] = spark.sparkContext.getConf().get("spark.driver.memory")
 sums = spark.range(6).withColumn("k", F.col("id") % 2).groupBy("k").applyInPandas(
     lambda pdf: pd.DataFrame({"k": [int(pdf.k.iloc[0])], "s": [int(pdf.id.sum())]}),
     "k long, s long",
@@ -178,6 +183,8 @@ def driver_run(tmp_path_factory):
 
 def test_get_session_runs_python_workers_from_any_cwd(driver_run):
     assert driver_run["daemons"] == ["electrician_spark.pyworker"]
+    assert driver_run["checkpoint_manager"].endswith(".FileSystemBasedCheckpointFileManager")
+    assert driver_run["driver_memory"] == "1g"  # SPARK_GRAFT_DRIVER_MEM wins
     assert driver_run["pandas"] == [[0, 6], [1, 9]]
     assert driver_run["arrow"] == [0, 2, 4, 6, 8]
     assert driver_run["resequence"] == [
@@ -192,3 +199,12 @@ def test_supplied_session_keeps_stock_daemon(driver_run):
     assert driver_run["supplied_conf_after"] == driver_run["supplied_conf_before"]
     assert driver_run["supplied_daemon_conf"] is None
     assert driver_run["supplied_daemons"] == ["pyspark.daemon"]
+    assert driver_run["supplied_checkpoint_manager"] is None  # Spark's default
+
+
+@pytest.mark.parametrize("phys_gib, expect", [(8, "4096m"), (15, "7680m"), (64, "16384m")])
+def test_driver_memory_defaults_to_half_of_host_at_most_16g(monkeypatch, phys_gib, expect):
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_gib * 2**30 // 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert session._driver_memory() == expect

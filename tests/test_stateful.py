@@ -99,6 +99,44 @@ def test_resequencer_holds_back_unfilled_gap(spark, tmp_path):
     assert out.count() == 0  # seq 1 never arrived; nothing may be emitted
 
 
+def test_resequencer_restart_resumes_buffered_gap(spark, tmp_path):
+    """A restarted query reads its buffered gap back from the state
+    store's delta files: a2 arrives only after the restart, and a3/a4,
+    buffered behind it in the first run, must come out then, once and
+    in order."""
+    src, ck, held = str(tmp_path / "src"), str(tmp_path / "ck"), str(tmp_path / "held.json")
+    _write_batches(
+        src,
+        [
+            [{"key": "a", "seq": 1, "payload": "a1"}, {"key": "a", "seq": 3, "payload": "a3"},
+             {"key": "b", "seq": 2, "payload": "b2"}],
+            [{"key": "a", "seq": 4, "payload": "a4"}, {"key": "b", "seq": 1, "payload": "b1"},
+             {"key": "b", "seq": 3, "payload": "b3"}],
+            [{"key": "a", "seq": 2, "payload": "a2"}, {"key": "b", "seq": 4, "payload": "b4"}],
+        ],
+    )
+    os.replace(os.path.join(src, "b0002.json"), held)  # arrives after the restart
+    emitted: list[tuple[str, int, str]] = []
+
+    def collect(batch, _epoch):
+        emitted.extend((r.key, r.seq, r.payload) for r in batch.collect())
+
+    def run():
+        stream = file_stream(spark, src, RESEQ_SCHEMA, max_files_per_trigger=1, fmt="json")
+        (
+            stateful.resequence(stream).writeStream.foreachBatch(collect)
+            .option("checkpointLocation", ck).trigger(availableNow=True).start()
+            .awaitTermination(120)
+        )
+
+    run()
+    assert sorted(emitted) == [("a", 1, "a1"), ("b", 1, "b1"), ("b", 2, "b2"), ("b", 3, "b3")]
+    os.replace(held, os.path.join(src, "b0002.json"))
+    run()
+    for key in ("a", "b"):
+        assert [(s, p) for k, s, p in emitted if k == key] == [(s, f"{key}{s}") for s in range(1, 5)]
+
+
 def test_rate_limit_event_time_refill(spark, tmp_path):
     src = str(tmp_path / "src")
     # capacity 2, refill 1/s. Key a: t=0,0,0 → admit,admit,divert;
