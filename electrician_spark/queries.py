@@ -69,6 +69,17 @@ def TS(s: str):
 
 
 @contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the block; the caller's value is restored
+    on exit, exceptions included."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
 def _state_partitions(spark: SparkSession, n: int = 2):
     """Run a streaming query with ``n`` shuffle (= state) partitions.
 
@@ -80,14 +91,89 @@ def _state_partitions(spark: SparkSession, n: int = 2):
     stateful rows at sf0.1 on 4 cores, the summed median per-batch
     ``triggerExecution`` read 15.4 s at n=2, 17.0 s at 4 and 22.9 s at 8
     (3 interleaved reps, identical outputs); n=2 was fastest on eight
-    rows and within 4% on q_ev1. The caller's value is restored on exit,
-    exceptions included."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    rows and within 4% on q_ev1."""
+    return _session_conf(spark, "spark.sql.shuffle.partitions", str(n))
+
+
+def _epoch_ts(t0_epoch: int, off: dict[int, int]):
+    """Column ``t0_epoch + off[event_id]`` (epoch seconds, long); ids
+    missing from ``off`` get ``t0_epoch``."""
+    ts = F.lit(t0_epoch).cast("long")
+    for i, o in off.items():
+        ts = ts + F.when(F.col("event_id") == i, o).otherwise(0)
+    return ts
+
+
+def _memory_run(
+    spark: SparkSession,
+    prefix: str,
+    build: Callable[[str], DataFrame],
+    *,
+    paced: tuple[int, int] | None = None,
+    no_data_batches: bool = True,
+) -> DataFrame:
+    """Run a bounded stream into a memory sink and return the sink's table.
+
+    ``build(src)`` writes what the stream reads at ``src``, a path in a
+    fresh temp dir, and returns the streaming DataFrame. The query gets
+    a unique name, a checkpoint in the same temp dir and
+    ``_state_partitions``, and completes through ``await_stream``. It
+    runs on the availableNow trigger and is complete when it
+    terminates. A paced source's available-now snapshot covers only its
+    first poll window, so a stream given ``paced=(rows, per_trigger)``
+    runs on a processing-time trigger until the sink holds ``rows``
+    rows; it must end with exactly ``rows`` rows, delivered in at least
+    ceil(rows / per_trigger) non-empty micro-batches. The temp dir is
+    deleted on the way out: the memory sink keeps its rows in the
+    driver.
+
+    ProcessingTimeTimeout state turns every no-data micro-batch into a
+    timer batch, so an availableNow query over it never terminates and
+    ``stop()`` would interrupt a timer batch in flight.
+    ``no_data_batches=False`` ends it after its last data batch instead;
+    timeouts still fire in data batches, for keys with no rows in the
+    batch. Watermarked queries need the no-data batches, which emit
+    what the last watermark advance finalized."""
+    import os
+    import shutil
+    import tempfile
+    import uuid
+
+    tmp = tempfile.mkdtemp(prefix=prefix)
     try:
-        yield
+        stream = build(os.path.join(tmp, "src"))
+        name = f"{prefix}sink_{uuid.uuid4().hex[:8]}"
+        if paced is None:
+            trigger, done = {"availableNow": True}, None
+        else:
+            rows, per_trigger = paced
+            trigger = {"processingTime": "100 milliseconds"}
+            done = lambda: spark.table(name).count() >= rows  # noqa: E731
+        no_data = str(no_data_batches).lower()
+        with _state_partitions(spark), _session_conf(
+            spark, "spark.sql.streaming.noDataMicroBatches.enabled", no_data
+        ):
+            q = (
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
+                .trigger(**trigger)
+                .start()
+            )
+            await_stream(q, done=done)
+        out = spark.table(name)
+        if paced is not None:
+            got = out.count()
+            batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+            if got != rows or batches < -(-rows // per_trigger):
+                raise AssertionError(
+                    f"{name} consumed {got} of {rows} rows in {batches} "
+                    f"non-empty micro-batch(es), at most {per_trigger} a batch"
+                )
+        return out
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1845,20 +1931,12 @@ def q_kc1(spark, sf_dir):
     # availableNow is deliberately NOT used here: Spark's available-now
     # wrapper snapshots latestOffset() once, and with a paced source
     # that snapshot is only the first poll window (measured: 400 of 800
-    # rows) — the processingTime + bounded-poll pattern is the one the
-    # kafka_fake contract tests pin.
-    import os
-    import tempfile
-    import time
-    import uuid
-
+    # rows) — the processingTime trigger with a sink-side row count is
+    # the pattern the kafka_fake contract tests pin.
     from electrician_spark import kafka_fake
     from electrician_spark.streaming.sinks import kafka_frame
 
     kafka_fake.register(spark)
-    tmp = tempfile.mkdtemp(prefix="esk_kc1_")
-    broker = os.path.join(tmp, "broker")
-
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_id") < 800)
@@ -1871,61 +1949,36 @@ def q_kc1(spark, sf_dir):
         key_template="ev:{event_id}",
         topic="events",
     )
-    frame.write.format("kafka_fake").options(
-        brokerDir=broker, topic="events", numPartitions="4"
-    ).mode("append").save()
 
-    stream = (
-        spark.readStream.format("kafka_fake")
-        .options(
-            brokerDir=broker,
-            subscribe="events",
-            startingOffsets="earliest",
-            maxOffsetsPerTrigger="100",
+    def build(broker):
+        frame.write.format("kafka_fake").options(
+            brokerDir=broker, topic="events", numPartitions="4"
+        ).mode("append").save()
+        stream = (
+            spark.readStream.format("kafka_fake")
+            .options(
+                brokerDir=broker,
+                subscribe="events",
+                startingOffsets="earliest",
+                maxOffsetsPerTrigger="100",
+            )
+            .load()
         )
-        .load()
-    )
-    key_str = F.decode(F.col("key"), "utf-8")
-    val_str = F.decode(F.col("value"), "utf-8")
-    decoded = stream.select(
-        F.split(key_str, ":").getItem(1).cast("long").alias("key_id"),
-        F.get_json_object(val_str, "$.event_id").cast("long").alias("event_id"),
-        F.get_json_object(val_str, "$.event_type").alias("event_type"),
-    )
-    name = "t_kc1_" + uuid.uuid4().hex[:8]
-    q = (
-        decoded.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 240
-        while time.time() < deadline and spark.table(name).count() < expected:
-            if q.exception() is not None:
-                break  # dead stream — fail below, don't burn the deadline
-            time.sleep(0.3)
-        got = spark.table(name).count()
-        paced = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    if q.exception() is not None:
-        raise q.exception()
-    assert got == expected, f"consumed {got} of {expected} produced records"
+        key_str = F.decode(F.col("key"), "utf-8")
+        val_str = F.decode(F.col("value"), "utf-8")
+        return stream.select(
+            F.split(key_str, ":").getItem(1).cast("long").alias("key_id"),
+            F.get_json_object(val_str, "$.event_id").cast("long").alias("event_id"),
+            F.get_json_object(val_str, "$.event_type").alias("event_type"),
+        )
+
     # pacing proof, derived from the slice rather than hard-coded: a
-    # trigger reads at most 4 partitions x 100 offsets, so the minimum
-    # batch count is ceil(expected / 400) — 2 at the standard 800-row
+    # trigger reads at most 4 partitions x 100 offsets, so the run takes
+    # at least ceil(expected / 400) batches — 2 at the standard 800-row
     # slice, degrading gracefully if a fixture ever shrinks the slice
-    min_batches = -(-expected // 400)
-    assert len(paced) >= min_batches, (
-        f"poll pacing produced {len(paced)} batch(es), expected >= {min_batches}"
-    )
+    consumed = _memory_run(spark, "esk_kc1_", build, paced=(expected, 400))
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        consumed.groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
             F.countDistinct("event_id").alias("n_ids"),
@@ -1962,20 +2015,13 @@ def q_kt1(spark, sf_dir):
     # as a row_number() rank filter (no id-density assumption). The
     # value-hash census over (event_type, n, n_ids) attests the exact
     # suffix, not just its size; maxOffsetsPerTrigger pacing stays on
-    # (>=2 micro-batches asserted), as in q_kc1.
+    # (>=2 micro-batches asserted).
     import json as _json
-    import os
-    import tempfile
-    import time
-    import uuid
 
     from electrician_spark import kafka_fake
     from electrician_spark.streaming.sinks import kafka_frame
 
     kafka_fake.register(spark)
-    tmp = tempfile.mkdtemp(prefix="esk_kt1_")
-    broker = os.path.join(tmp, "broker")
-
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_id") < 800)
@@ -1989,61 +2035,32 @@ def q_kt1(spark, sf_dir):
         key_template="ev:{event_id}",
         topic="events_ts",
     )
-    frame.write.format("kafka_fake").options(
-        brokerDir=broker, topic="events_ts", numPartitions="1"
-    ).mode("append").save()
 
-    stream = (
-        spark.readStream.format("kafka_fake")
-        .options(
-            brokerDir=broker,
-            subscribe="events_ts",
-            startingOffsetsByTimestamp=_json.dumps({"events_ts": {"-1": cut * 1000}}),
-            maxOffsetsPerTrigger="200",
+    def build(broker):
+        frame.write.format("kafka_fake").options(
+            brokerDir=broker, topic="events_ts", numPartitions="1"
+        ).mode("append").save()
+        stream = (
+            spark.readStream.format("kafka_fake")
+            .options(
+                brokerDir=broker,
+                subscribe="events_ts",
+                startingOffsetsByTimestamp=_json.dumps({"events_ts": {"-1": cut * 1000}}),
+                maxOffsetsPerTrigger="200",
+            )
+            .load()
         )
-        .load()
-    )
-    val_str = F.decode(F.col("value"), "utf-8")
-    decoded = stream.select(
-        F.get_json_object(val_str, "$.event_id").cast("long").alias("event_id"),
-        F.get_json_object(val_str, "$.event_type").alias("event_type"),
-    )
-    name = "t_kt1_" + uuid.uuid4().hex[:8]
-    q = (
-        decoded.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    suffix = expected - cut
-    try:
-        deadline = time.time() + 240
-        while time.time() < deadline and spark.table(name).count() < suffix:
-            if q.exception() is not None:
-                break  # dead stream — fail below, don't burn the deadline
-            time.sleep(0.3)
-        got = spark.table(name).count()
-        paced = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    finally:
-        q.stop()
-        q.awaitTermination(60)
-    if q.exception() is not None:
-        raise q.exception()
-    assert got == suffix, (
-        f"timestamp start at offset {cut} consumed {got}, expected the "
-        f"{suffix}-record suffix"
-    )
+        val_str = F.decode(F.col("value"), "utf-8")
+        return stream.select(
+            F.get_json_object(val_str, "$.event_id").cast("long").alias("event_id"),
+            F.get_json_object(val_str, "$.event_type").alias("event_type"),
+        )
+
     # one partition × 200 offsets per trigger — 2 paced batches at the
     # standard 400-record suffix, degrading gracefully with the fixture
-    min_batches = -(-suffix // 200)
-    assert len(paced) >= min_batches, (
-        f"poll pacing produced {len(paced)} batch(es), expected >= {min_batches}"
-    )
+    consumed = _memory_run(spark, "esk_kt1_", build, paced=(expected - cut, 200))
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        consumed.groupBy("event_type")
         .agg(F.count("*").alias("n"), F.countDistinct("event_id").alias("n_ids"))
         .orderBy("event_type")
     )
@@ -2069,9 +2086,6 @@ def q_r1(spark, sf_dir):
     # applyInPandasWithState resequencer — which must reconstruct exact
     # per-key seq order, buffering gaps across batch boundaries. The
     # oracle is the order the forward relay stamped.
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window
 
     from electrician_spark.streaming import stateful
@@ -2084,22 +2098,13 @@ def q_r1(spark, sf_dir):
         F.row_number().over(w).cast("long").alias("seq"),
         F.col("event_id").cast("string").alias("payload"),
     )
-    base = tempfile.mkdtemp(prefix="esk_r1_")
-    src = base + "/src"
-    seqd.repartition(8).write.mode("overwrite").parquet(src)
-    stream = file_stream(spark, src, seqd.schema, max_files_per_trigger=3)
-    name = "t_r1_" + uuid.uuid4().hex[:8]
-    q = (
-        stateful.resequence(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", base + "/ck")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_stream(q, 180)
-    return spark.table(name).orderBy("key", "seq")
+
+    def build(src):
+        seqd.repartition(8).write.mode("overwrite").parquet(src)
+        stream = file_stream(spark, src, seqd.schema, max_files_per_trigger=3)
+        return stateful.resequence(stream)
+
+    return _memory_run(spark, "esk_r1_", build).orderBy("key", "seq")
 
 
 # ---------------------------------------------------------------------------
@@ -3458,16 +3463,13 @@ def q_id1(spark, sf_dir):
     tags=("streaming", "stateful"),
 )
 def q_rs1(spark, sf_dir):
-    # streaming/stateful.resequence driven by a REAL availableNow
-    # stream (maxFilesPerTrigger=1 → one micro-batch per file). State
-    # is (next_seq, gap buffer) per key — bounded by in-flight gaps,
-    # the 100 TB posture being per-key state, not per-corpus.
-    import os
-    import tempfile
-
+    # streaming/stateful.resequence over three arrival waves, one
+    # micro-batch each. State is (next_seq, gap buffer) per key —
+    # bounded by in-flight gaps, not by stream length.
     from pyspark.sql import Window
 
     from electrician_spark.streaming import stateful
+    from electrician_spark.streaming.sources import arrival_waves
 
     events = (
         _t(spark, sf_dir, "events")
@@ -3477,43 +3479,18 @@ def q_rs1(spark, sf_dir):
     w = Window.partitionBy("key").orderBy("event_id")
     rows = events.select(
         "key",
-        F.row_number().over(w).alias("seq"),
+        F.row_number().over(w).cast("long").alias("seq"),
         F.concat(F.lit("p"), F.col("event_id").cast("string")).alias("payload"),
     )
-
-    tmp = tempfile.mkdtemp(prefix="q_rs1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    # three arrival waves, mtime-pinned so FileStreamSource order is
-    # deterministic: odds (gaps everywhere), evens (gaps close), full
-    # duplicate replay (every row stale-dropped)
-    odds = rows.filter(F.col("seq") % 2 == 1)
-    evens = rows.filter(F.col("seq") % 2 == 0)
-    odds.toPandas().to_json(os.path.join(src, "a_odds.json"), orient="records", lines=True)
-    evens.toPandas().to_json(os.path.join(src, "b_evens.json"), orient="records", lines=True)
-    rows.toPandas().to_json(os.path.join(src, "c_replay.json"), orient="records", lines=True)
-    base = os.path.getmtime(os.path.join(src, "c_replay.json"))
-    os.utime(os.path.join(src, "a_odds.json"), (base - 200, base - 200))
-    os.utime(os.path.join(src, "b_evens.json"), (base - 100, base - 100))
-
-    stream = (
-        spark.readStream.schema("key string, seq long, payload string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
+    # odds (gaps everywhere), evens (gaps close), full duplicate replay
+    # (every row stale-dropped)
+    waves = [rows.filter(F.col("seq") % 2 == 1), rows.filter(F.col("seq") % 2 == 0), rows]
+    delivered = _memory_run(
+        spark,
+        "q_rs1_",
+        lambda src: stateful.resequence(arrival_waves(spark, src, waves), "key", "seq", "payload"),
     )
-    delivered = stateful.resequence(stream, "key", "seq", "payload")
-    name = "q_rs1_sink_" + os.path.basename(tmp).replace("q_rs1_", "")
-    with _state_partitions(spark):
-        q = (
-            delivered.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q, 300)
-    return spark.table(name).select("key", "seq", "payload").orderBy("key", "seq")
+    return delivered.select("key", "seq", "payload").orderBy("key", "seq")
 
 
 # WordPiece: the training mini-corpus is a LITERAL (sf-independent), so
@@ -3967,17 +3944,13 @@ _SQL_RL_REFILL = (
     tags=("streaming", "stateful"),
 )
 def q_rl1(spark, sf_dir):
-    # streaming/stateful.rate_limit through the REAL
-    # applyInPandasWithState path (the q_rs1 recipe): two arrival
-    # waves as separate micro-batches (maxFilesPerTrigger=1,
-    # mtime-pinned order), per-key bucket state persisting across the
-    # batch boundary; rejected records are MARKED divert, never
-    # dropped (the surge-protector divert-to-backup contract,
-    # reference surgeprotector/rate_limit.go:49-76 semantics).
-    import os
-    import tempfile
-
+    # streaming/stateful.rate_limit over two arrival waves, one
+    # micro-batch each, so per-key bucket state persists across the
+    # batch boundary; rejected records are MARKED divert, never dropped
+    # (the surge-protector divert-to-backup contract, reference
+    # surgeprotector/rate_limit.go:49-76 semantics).
     from electrician_spark.streaming import stateful
+    from electrician_spark.streaming.sources import arrival_waves
 
     rows = (
         _t(spark, sf_dir, "events")
@@ -3989,41 +3962,16 @@ def q_rl1(spark, sf_dir):
             (F.col("event_id") % 2).alias("par"),
         )
     )
-    tmp = tempfile.mkdtemp(prefix="q_rl1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    odds = rows.filter(F.col("par") == 1).drop("par")
-    evens = rows.filter(F.col("par") == 0).drop("par")
-    odds.toPandas().to_json(
-        os.path.join(src, "a_wave1.json"), orient="records", lines=True
+    waves = [rows.filter(F.col("par") == p).drop("par") for p in (1, 0)]
+    gated = _memory_run(
+        spark,
+        "q_rl1_",
+        lambda src: stateful.rate_limit(
+            arrival_waves(spark, src, waves), capacity=5.0, refill_per_sec=0.5
+        ),
     )
-    evens.toPandas().to_json(
-        os.path.join(src, "b_wave2.json"), orient="records", lines=True
-    )
-    base = os.path.getmtime(os.path.join(src, "b_wave2.json"))
-    os.utime(os.path.join(src, "a_wave1.json"), (base - 100, base - 100))
-
-    stream = (
-        spark.readStream.schema("key string, event_time_s double, payload string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    gated = stateful.rate_limit(stream, capacity=5.0, refill_per_sec=0.5)
-    name = "q_rl1_sink_" + os.path.basename(tmp).replace("q_rl1_", "")
-    with _state_partitions(spark):
-        q = (
-            gated.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q, 300)
-    return (
-        spark.table(name)
-        .select("key", "event_time_s", "payload", "admitted")
-        .orderBy("key", "event_time_s")
+    return gated.select("key", "event_time_s", "payload", "admitted").orderBy(
+        "key", "event_time_s"
     )
 
 
@@ -4595,6 +4543,7 @@ def q_fo1(spark, sf_dir):
     import tempfile
 
     from electrician_spark.streaming.sinks import ForEachBatchRouter, parquet_sink
+    from electrician_spark.streaming.sources import arrival_waves
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -4602,27 +4551,14 @@ def q_fo1(spark, sf_dir):
         .select("event_id", "event_type")
     )
     tmp = tempfile.mkdtemp(prefix="q_fo1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    ev.filter(F.col("event_id") % 2 == 1).toPandas().to_json(
-        os.path.join(src, "a_odds.json"), orient="records", lines=True
+    stream = arrival_waves(
+        spark, os.path.join(tmp, "src"), [ev.filter(F.col("event_id") % 2 == r) for r in (1, 0)]
     )
-    ev.filter(F.col("event_id") % 2 == 0).toPandas().to_json(
-        os.path.join(src, "b_evens.json"), orient="records", lines=True
-    )
-    base = os.path.getmtime(os.path.join(src, "b_evens.json"))
-    os.utime(os.path.join(src, "a_odds.json"), (base - 100, base - 100))
-
     paths = {c: os.path.join(tmp, f"sink_{c}") for c in ("a", "b", "dlq")}
     router = ForEachBatchRouter(
         sinks=[parquet_sink(paths["a"]), parquet_sink(paths["b"])],
         dlq_sink=parquet_sink(paths["dlq"]),
         error_condition=F.col("event_type") == "error",
-    )
-    stream = (
-        spark.readStream.schema("event_id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
     )
     q = (
         stream.writeStream.foreachBatch(router)
@@ -4630,7 +4566,7 @@ def q_fo1(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    await_stream(q, 300)
+    await_stream(q)
 
     parts = [
         spark.read.parquet(p).select(F.lit(c).alias("channel"), "event_type")
@@ -4647,10 +4583,9 @@ def q_fo1(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-10 promotions — the r9 verdict's next-round queue: the unigram/
-# SentencePiece Viterbi encode (the one tokenizer family without a driver
-# row), the C5 breaker-backup divert (last untested composition path),
-# stateful timeout/eviction, and the suffix-array substring dedup variant.
+# The unigram/SentencePiece Viterbi encode, the C5 breaker-backup divert,
+# the A4 threshold abort, stateful timeout/eviction, and the suffix-array
+# substring dedup variant.
 # ---------------------------------------------------------------------------
 
 
@@ -4949,8 +4884,8 @@ def q_em1(spark, sf_dir):
     tags=("streaming", "reliability", "sink"),
 )
 def q_cb1(spark, sf_dir):
-    # The q_fo1 recipe with a PRE-TRIPPED CircuitBreaker(clock=frozen):
-    # a real two-micro-batch availableNow stream through the real
+    # A PRE-TRIPPED CircuitBreaker(clock=frozen) on a real
+    # two-micro-batch availableNow stream through the real
     # ForEachBatchRouter, breaker opened by one recorded error under a
     # frozen monotonic clock (reset_timeout never elapses), so the
     # divert path — not the fan-out path — carries both batches. The
@@ -4964,6 +4899,7 @@ def q_cb1(spark, sf_dir):
 
     from electrician_spark.reliability import CircuitBreaker
     from electrician_spark.streaming.sinks import ForEachBatchRouter, parquet_sink
+    from electrician_spark.streaming.sources import arrival_waves
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -4971,17 +4907,9 @@ def q_cb1(spark, sf_dir):
         .select("event_id", "event_type")
     )
     tmp = tempfile.mkdtemp(prefix="q_cb1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    ev.filter(F.col("event_id") % 2 == 1).toPandas().to_json(
-        os.path.join(src, "a_odds.json"), orient="records", lines=True
+    stream = arrival_waves(
+        spark, os.path.join(tmp, "src"), [ev.filter(F.col("event_id") % 2 == r) for r in (1, 0)]
     )
-    ev.filter(F.col("event_id") % 2 == 0).toPandas().to_json(
-        os.path.join(src, "b_evens.json"), orient="records", lines=True
-    )
-    base = os.path.getmtime(os.path.join(src, "b_evens.json"))
-    os.utime(os.path.join(src, "a_odds.json"), (base - 100, base - 100))
-
     paths = {c: os.path.join(tmp, f"sink_{c}") for c in ("primary", "backup")}
     breaker = CircuitBreaker(
         threshold=1, reset_timeout_sec=1e9, clock=lambda: 0.0
@@ -4993,18 +4921,13 @@ def q_cb1(spark, sf_dir):
         backups=[parquet_sink(paths["backup"])],
         breaker=breaker,
     )
-    stream = (
-        spark.readStream.schema("event_id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
     q = (
         stream.writeStream.foreachBatch(router)
         .option("checkpointLocation", os.path.join(tmp, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
-    await_stream(q, 300)
+    await_stream(q)
 
     parts = [
         spark.read.parquet(paths["backup"]).select(
@@ -5068,7 +4991,10 @@ def q_ab1(spark, sf_dir):
     import re
     import tempfile
 
+    from pyspark.errors import StreamingQueryException
+
     from electrician_spark.streaming.sinks import ForEachBatchRouter, parquet_sink
+    from electrician_spark.streaming.sources import arrival_waves
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -5076,18 +5002,12 @@ def q_ab1(spark, sf_dir):
         .select("event_id", "event_type")
     )
     tmp = tempfile.mkdtemp(prefix="q_ab1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
     b2_ids = [101, 103, 105] + list(range(110, 201, 10))
-    ev.filter(F.col("event_id") <= 100).toPandas().to_json(
-        os.path.join(src, "a_calm.json"), orient="records", lines=True
+    stream = arrival_waves(
+        spark,
+        os.path.join(tmp, "src"),
+        [ev.filter(F.col("event_id") <= 100), ev.filter(F.col("event_id").isin(*b2_ids))],
     )
-    ev.filter(F.col("event_id").isin(*b2_ids)).toPandas().to_json(
-        os.path.join(src, "b_breach.json"), orient="records", lines=True
-    )
-    base = os.path.getmtime(os.path.join(src, "b_breach.json"))
-    os.utime(os.path.join(src, "a_calm.json"), (base - 100, base - 100))
-
     paths = {c: os.path.join(tmp, f"sink_{c}") for c in ("primary", "dlq")}
     aborted: list[bool] = []
     router = ForEachBatchRouter(
@@ -5097,11 +5017,6 @@ def q_ab1(spark, sf_dir):
         error_ratio_abort=0.5,
         on_abort=lambda: aborted.append(True),
     )
-    stream = (
-        spark.readStream.schema("event_id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
     q = (
         stream.writeStream.foreachBatch(router)
         .option("checkpointLocation", os.path.join(tmp, "ckpt"))
@@ -5109,22 +5024,11 @@ def q_ab1(spark, sf_dir):
         .start()
     )
     try:
-        done = q.awaitTermination(300)  # raises when the query ABORTS — expected
-    except Exception as e:  # noqa: BLE001 — the abort IS the attested event
+        await_stream(q)
+        exc = None
+    except StreamingQueryException as e:  # the abort IS the attested event
         exc = e
-    else:
-        exc = q.exception()
-        if exc is None and not done:
-            # timeout with the query still RUNNING: stop it so the
-            # session isn't left with a live stream; the census below
-            # then records NO-ABORT-RECORDED and the oracle mismatch
-            # surfaces the failure (same contract as sinks.await_stream)
-            q.stop()
-    m = (
-        re.search(r"error ratio \d+/\d+ >= [0-9.]+ — aborting", str(exc))
-        if exc is not None
-        else None
-    )
+    m = re.search(r"error ratio \d+/\d+ >= [0-9.]+ — aborting", str(exc))
     reason = m.group(0) if (m and aborted) else "NO-ABORT-RECORDED"
     parts = [
         spark.read.parquet(paths["primary"]).select(
@@ -5171,68 +5075,32 @@ def q_ab1(spark, sf_dir):
 )
 def q_ev1(spark, sf_dir):
     # streaming/stateful.resequence(idle_timeout_ms=1) through the
-    # REAL applyInPandasWithState path with ProcessingTimeTimeout (the
-    # q_rl1 recipe extended with an eviction wave — the r9 verdict's
-    # item 5). Two mtime-ordered NDJSON files -> two real micro-
-    # batches; payloads are event_type values from the events table so
-    # the attested rows carry corpus data, not synthetics.
-    import os
-    import tempfile
-
+    # REAL applyInPandasWithState path with ProcessingTimeTimeout, two
+    # arrival waves; payloads are event_type values from the events
+    # table so the attested rows carry corpus data, not synthetics.
     from electrician_spark.streaming import stateful
+    from electrician_spark.streaming.sources import arrival_waves
 
     ev = (
         _t(spark, sf_dir, "events")
         .filter((F.col("event_id") >= 1) & (F.col("event_id") <= 50))
         .select("event_id", "event_type")
     )
-    tmp = tempfile.mkdtemp(prefix="q_ev1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    a = ev.filter(F.col("event_id") != 3).select(
-        F.lit("a").alias("key"),
-        F.col("event_id").alias("seq"),
-        F.col("event_type").alias("payload"),
-    )
-    b = ev.filter(F.col("event_id") <= 40).select(
-        F.lit("b").alias("key"),
-        F.col("event_id").alias("seq"),
-        F.col("event_type").alias("payload"),
-    )
-    a.toPandas().to_json(
-        os.path.join(src, "a_wave1.json"), orient="records", lines=True
-    )
-    b.toPandas().to_json(
-        os.path.join(src, "b_wave2.json"), orient="records", lines=True
-    )
-    base = os.path.getmtime(os.path.join(src, "b_wave2.json"))
-    os.utime(os.path.join(src, "a_wave1.json"), (base - 100, base - 100))
-
-    stream = (
-        spark.readStream.schema("key string, seq long, payload string")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    out = stateful.resequence(stream, idle_timeout_ms=1)
-    name = "q_ev1_sink_" + os.path.basename(tmp).replace("q_ev1_", "")
-    # Everything that arrived must eventually deliver (normal path +
-    # eviction flush) — that count is the sink-side completion signal
-    # for drain_timeout_query; a missing flush leaves the sink short
-    # and the oracle compare red.
-    n_expected = a.count() + b.count()
-    with _state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    waves = [
+        ev.filter(cond).select(
+            F.lit(k).alias("key"),
+            F.col("event_id").alias("seq"),
+            F.col("event_type").alias("payload"),
         )
-        stateful.drain_timeout_query(
-            q, lambda: spark.table(name).count() >= n_expected
-        )
-    return spark.table(name).select("key", "seq", "payload").orderBy("key", "seq")
+        for k, cond in (("a", F.col("event_id") != 3), ("b", F.col("event_id") <= 40))
+    ]
+    out = _memory_run(
+        spark,
+        "q_ev1_",
+        lambda src: stateful.resequence(arrival_waves(spark, src, waves), idle_timeout_ms=1),
+        no_data_batches=False,
+    )
+    return out.select("key", "seq", "payload").orderBy("key", "seq")
 
 
 @query(
@@ -5340,87 +5208,40 @@ def q_sa1(spark, sf_dir):
 )
 def q_rt1(spark, sf_dir):
     # streaming/stateful.rate_limit(idle_timeout_ms=1) through the
-    # REAL applyInPandasWithState + ProcessingTimeTimeout path (the
-    # q_ev1 recipe on the second stateful operator). Event times are
-    # event_id-derived within each wave so the in-batch admit order is
-    # deterministic; event_id rides through as the payload-adjacent
-    # column for the closed-form oracle join-back.
-    import os
-    import tempfile
-
+    # REAL applyInPandasWithState + ProcessingTimeTimeout path over
+    # three arrival waves. Event times are event_id-derived within each
+    # wave so the in-batch admit order is deterministic.
     from electrician_spark.streaming import stateful
+    from electrician_spark.streaming.sources import arrival_waves
 
     ev = (
         _t(spark, sf_dir, "events")
         .filter((F.col("event_id") >= 1) & (F.col("event_id") <= 30))
         .select("event_id", "event_type")
     )
-    tmp = tempfile.mkdtemp(prefix="q_rt1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    waves = {
-        "a_wave1.json": ev.filter(F.col("event_id") <= 10).select(
-            F.lit("a").alias("key"),
-            (F.lit(1.0) + F.col("event_id") * 0.001).alias("event_time_s"),
-            F.col("event_id"),
-            F.col("event_type").alias("payload"),
-        ),
-        "b_wave2.json": ev.filter(
-            (F.col("event_id") >= 11) & (F.col("event_id") <= 20)
-        ).select(
-            F.lit("b").alias("key"),
-            (F.lit(2.0) + F.col("event_id") * 0.001).alias("event_time_s"),
-            F.col("event_id"),
-            F.col("event_type").alias("payload"),
-        ),
-        "c_wave3.json": ev.filter(F.col("event_id") >= 21).select(
-            F.lit("a").alias("key"),
-            (F.lit(1.0) + F.col("event_id") * 0.001).alias("event_time_s"),
-            F.col("event_id"),
-            F.col("event_type").alias("payload"),
-        ),
-    }
-    for i, (fname, df) in enumerate(waves.items()):
-        path = os.path.join(src, fname)
-        df.toPandas().to_json(path, orient="records", lines=True)
-    base = os.path.getmtime(path)
-    for i, fname in enumerate(waves):
-        os.utime(os.path.join(src, fname), (base - 100 + i, base - 100 + i))
-
-    stream = (
-        spark.readStream.schema(
-            "key string, event_time_s double, event_id long, payload string"
+    # the operator's output schema is fixed (key, time, payload,
+    # admitted), so event_id rides in the payload and is split back out
+    waves = [
+        ev.filter(F.col("event_id").between(lo, lo + 9)).select(
+            F.lit(key).alias("key"),
+            (F.lit(t0) + F.col("event_id") * 0.001).alias("event_time_s"),
+            F.concat(
+                F.col("event_id").cast("string"), F.lit("|"), F.col("event_type")
+            ).alias("payload"),
         )
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
+        for key, lo, t0 in (("a", 1, 1.0), ("b", 11, 2.0), ("a", 21, 1.0))
+    ]
+    res = _memory_run(
+        spark,
+        "q_rt1_",
+        lambda src: stateful.rate_limit(
+            arrival_waves(spark, src, waves),
+            capacity=5.0,
+            refill_per_sec=0.0,
+            idle_timeout_ms=1,
+        ),
+        no_data_batches=False,
     )
-    # event_id is carried INSIDE the payload-adjacent column set: the
-    # operator's output schema is fixed (key, time, payload, admitted),
-    # so stash event_id in the payload and split it back out after.
-    tagged = stream.select(
-        "key",
-        "event_time_s",
-        F.concat(
-            F.col("event_id").cast("string"), F.lit("|"), F.col("payload")
-        ).alias("payload"),
-    )
-    out = stateful.rate_limit(
-        tagged, capacity=5.0, refill_per_sec=0.0, idle_timeout_ms=1
-    )
-    name = "q_rt1_sink_" + os.path.basename(tmp).replace("q_rt1_", "")
-    with _state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        stateful.drain_timeout_query(
-            q, lambda: spark.table(name).count() >= 30
-        )
-    res = spark.table(name)
     split = F.split(F.col("payload"), r"\|", 2)
     return res.select(
         "key",
@@ -5495,84 +5316,46 @@ def q_sx1(spark, sf_dir):
 )
 def q_wm1(spark, sf_dir):
     # streaming: withWatermark('ts', '10 minutes') -> 10-minute
-    # tumbling window -> append-mode memory sink over four mtime-
-    # ordered NDJSON micro-batches. Window starts surface as epoch
-    # seconds (timestamp->long cast), so the comparison is timezone-
-    # independent under any driver session; T0 is 600-aligned so the
-    # closed-form bucket arithmetic matches Spark's epoch-aligned
-    # windows. Event payloads (event_type) come from the events table.
-    import json
-    import os
-    import tempfile
-    import time
+    # tumbling window -> append-mode memory sink over four arrival
+    # waves. Window starts surface as epoch seconds (timestamp->long
+    # cast), so the comparison is timezone-independent under any driver
+    # session; T0 is 600-aligned so the closed-form bucket arithmetic
+    # matches Spark's epoch-aligned windows. Event payloads
+    # (event_type) come from the events table.
+    from electrician_spark.streaming.sources import arrival_waves
 
-    t0_epoch = 1_699_999_800  # 600-aligned
-    ev = {
-        r["event_id"]: r["event_type"]
-        for r in _t(spark, sf_dir, "events")
-        .filter((F.col("event_id") >= 1) & (F.col("event_id") <= 15))
-        .select("event_id", "event_type")
-        .collect()
-    }
     off = {i: 60 * i for i in range(1, 9)}
     off.update({9: 700, 10: 1250, 11: 300, 12: 1300, 13: 1320, 14: 1340, 15: 99990})
+    ev = (
+        _t(spark, sf_dir, "events")
+        .filter((F.col("event_id") >= 1) & (F.col("event_id") <= 15))
+        .select("event_id", "event_type", _epoch_ts(1_699_999_800, off).alias("ts"))
+    )
     waves = [
-        [i for i in range(1, 11)],  # windows 0-2 incl. the max pusher
-        [12, 13, 14],               # window 2 continues
-        [11],                       # LATE: window 0 closed two batches ago
-        [15],                       # fence: finalizes all data windows
+        list(range(1, 11)),  # windows 0-2 incl. the max pusher
+        [12, 13, 14],        # window 2 continues
+        [11],                # LATE: window 0 closed two batches ago
+        [15],                # fence: finalizes all data windows
     ]
-    tmp = tempfile.mkdtemp(prefix="q_wm1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    now = time.time()
-    for b, ids in enumerate(waves):
-        path = os.path.join(src, f"b{b}.json")
-        with open(path, "w") as f:
-            for i in ids:
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": i,
-                            "event_type": ev[i],
-                            "ts": t0_epoch + off[i],
-                        }
-                    )
-                    + "\n"
-                )
-        os.utime(path, (now + b, now + b))
 
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, ts long")
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes"))
-        .agg(
-            F.count("*").alias("n"),
-            F.min("event_id").alias("min_id"),
-            F.max("event_id").alias("max_id"),
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            .cast("long")
-            .alias("n_click"),
+    def build(src):
+        stream = arrival_waves(spark, src, [ev.filter(F.col("event_id").isin(*w)) for w in waves])
+        return (
+            stream.withColumn("ts", F.col("ts").cast("timestamp"))
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "10 minutes"))
+            .agg(
+                F.count("*").alias("n"),
+                F.min("event_id").alias("min_id"),
+                F.max("event_id").alias("max_id"),
+                F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
+                .cast("long")
+                .alias("n_click"),
+            )
         )
-    )
-    name = "q_wm1_sink_" + os.path.basename(tmp).replace("q_wm1_", "")
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q, 300)
+
     return (
-        spark.table(name)
+        _memory_run(spark, "q_wm1_", build)
         .select(
             F.col("window.start").cast("long").alias("w_start"),
             "n",
@@ -5609,8 +5392,8 @@ def q_wm1(spark, sf_dir):
 )
 def q_dw1(spark, sf_dir):
     # streaming/windows.dedupe_within_watermark (withWatermark ->
-    # dropDuplicatesWithinWatermark) over five mtime-ordered NDJSON
-    # micro-batches. Schedule (delay = 10 min, epoch-offset seconds):
+    # dropDuplicatesWithinWatermark) over five arrival waves, one
+    # micro-batch each. Schedule (delay = 10 min, epoch-offset seconds):
     # b0: a@0 (id1), b@60 (id2) -> both admitted
     # b1: a@120 (id3, dup while state alive) -> DROPPED; c@180 (id4)
     # b2: f@4200 (id5, fence 1) -> admitted, watermark pusher
@@ -5619,12 +5402,9 @@ def q_dw1(spark, sf_dir):
     # b4: a@4100 (id7) -> state evicted (wm >= 3600 > 0+600), ADMITTED
     #     AGAIN; f@4210 (id8, dup of the live fence key, expiry 4800 >
     #     wm) -> DROPPED
-    import os
-    import tempfile
-
     from electrician_spark.streaming import windows as swin
+    from electrician_spark.streaming.sources import arrival_waves
 
-    t0_epoch = 1_700_000_000
     ev = _t(spark, sf_dir, "events").filter(
         (F.col("event_id") >= 1) & (F.col("event_id") <= 8)
     )
@@ -5636,58 +5416,30 @@ def q_dw1(spark, sf_dir):
         .otherwise("g")
     )
     off = {1: 0, 2: 60, 3: 120, 4: 180, 5: 4200, 6: 4300, 7: 4100, 8: 4210}
-    ts = F.lit(t0_epoch).cast("long")
-    for i, o in off.items():
-        ts = ts + F.when(F.col("event_id") == i, o).otherwise(0)
     rows = ev.select(
         key.alias("key"),
-        ts.cast("double").alias("ts_epoch"),
+        _epoch_ts(1_700_000_000, off).cast("double").alias("ts_epoch"),
         F.col("event_id"),
         F.col("event_type").alias("payload"),
     )
-    tmp = tempfile.mkdtemp(prefix="q_dw1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    waves = [(1, 2), (3, 4), (5,), (6,), (7, 8)]
-    for b, ids in enumerate(waves):
-        path = os.path.join(src, f"b{b}.json")
-        rows.filter(F.col("event_id").isin(*ids)).toPandas().to_json(
-            path, orient="records", lines=True
-        )
-    base = os.path.getmtime(path)
-    for b in range(len(waves)):
-        os.utime(os.path.join(src, f"b{b}.json"), (base - 100 + b, base - 100 + b))
-
-    stream = (
-        spark.readStream.schema(
-            "key string, ts_epoch double, event_id long, payload string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-        .withColumn("ts", F.col("ts_epoch").cast("timestamp"))
+    schedule = [(1, 2), (3, 4), (5,), (6,), (7, 8)]
+    waves = [rows.filter(F.col("event_id").isin(*ids)) for ids in schedule]
+    out = _memory_run(
+        spark,
+        "q_dw1_",
+        lambda src: swin.dedupe_within_watermark(
+            arrival_waves(spark, src, waves).withColumn("ts", F.col("ts_epoch").cast("timestamp")),
+            ["key"],
+            "ts",
+            "10 minutes",
+        ),
     )
-    out = swin.dedupe_within_watermark(stream, ["key"], "ts", "10 minutes")
-    name = "q_dw1_sink_" + os.path.basename(tmp).replace("q_dw1_", "")
-    with _state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q, 300)
-    return (
-        spark.table(name)
-        .select(
-            "key",
-            "event_id",
-            "payload",
-            F.col("ts").cast("long").alias("ts_epoch"),
-        )
-        .orderBy("event_id")
-    )
+    return out.select(
+        "key",
+        "event_id",
+        "payload",
+        F.col("ts").cast("long").alias("ts_epoch"),
+    ).orderBy("event_id")
 
 
 @query(
@@ -5833,35 +5585,18 @@ def q_pb1(spark, sf_dir):
     tags=("streaming", "join"),
 )
 def q_se1(spark, sf_dir):
-    # streaming/joins.enrich_stream_static over three mtime-ordered
-    # NDJSON micro-batches (200 orders each, deterministic subset =
-    # first 600 by o_orderkey). The dim is customer⋈nation built
-    # batch-side from the same sf_dir; route_key is the reference's
-    # '{field}' key-template composition.
-    import os
-    import tempfile
-
+    # streaming/joins.enrich_stream_static over three arrival waves
+    # (200 orders each, deterministic subset = first 600 by
+    # o_orderkey). The dim is customer⋈nation built batch-side from the
+    # same sf_dir; route_key is the reference's '{field}' key-template
+    # composition.
     from electrician_spark.streaming import joins as sjoins
+    from electrician_spark.streaming.sources import arrival_waves
 
-    orders = (
-        _t(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy("o_orderkey")
-        .limit(600)
-    )
-    tmp = tempfile.mkdtemp(prefix="q_se1_")
-    src = os.path.join(tmp, "src")
-    os.makedirs(src)
-    pdf = orders.toPandas()  # bounded: 600 rows, fixture writer
-    for b in range(3):
-        path = os.path.join(src, f"b{b}.json")
-        pdf.iloc[b * 200 : (b + 1) * 200].to_json(
-            path, orient="records", lines=True
-        )
-    base = os.path.getmtime(path)
-    for b in range(3):
-        os.utime(os.path.join(src, f"b{b}.json"), (base - 100 + b, base - 100 + b))
-
+    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
+    first = orders.select("o_orderkey").orderBy("o_orderkey").limit(600)
+    keys = [r.o_orderkey for r in first.collect()]  # bounded: 600 keys
+    waves = [orders.filter(F.col("o_orderkey").isin(keys[lo : lo + 200])) for lo in (0, 200, 400)]
     dim = (
         _t(spark, sf_dir, "customer")
         .join(
@@ -5875,39 +5610,25 @@ def q_se1(spark, sf_dir):
             "n_name",
         )
     )
-    stream = (
-        spark.readStream.schema(
-            "o_orderkey long, o_custkey long, o_totalprice double"
+
+    def build(src):
+        stream = arrival_waves(spark, src, waves)
+        return sjoins.enrich_stream_static(stream, dim, ["o_custkey"]).select(
+            "o_orderkey",
+            F.round("o_totalprice", 2).alias("total"),
+            "c_name",
+            F.col("c_mktsegment").alias("mktsegment"),
+            "n_name",
+            F.concat_ws("/", F.col("c_mktsegment"), F.col("o_orderkey")).alias("route_key"),
         )
-        .option("maxFilesPerTrigger", 1)
-        .json(src)
-    )
-    enriched = sjoins.enrich_stream_static(stream, dim, ["o_custkey"]).select(
-        "o_orderkey",
-        F.round("o_totalprice", 2).alias("total"),
-        "c_name",
-        F.col("c_mktsegment").alias("mktsegment"),
-        "n_name",
-        F.concat_ws("/", F.col("c_mktsegment"), F.col("o_orderkey")).alias(
-            "route_key"
-        ),
-    )
-    name = "q_se1_sink_" + os.path.basename(tmp).replace("q_se1_", "")
-    with _state_partitions(spark):
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q, 300)
-    return spark.table(name).orderBy("o_orderkey")
+
+    return _memory_run(spark, "q_se1_", build).orderBy("o_orderkey")
 
 
-def _sj_interval_streams(spark, sf_dir, prefix):
-    """The shared q_sj1/q_sj2 two-file-stream interval-join fixture.
+def _sj_interval_join(spark, sf_dir, prefix, how):
+    """The q_sj1/q_sj2 run: an impression stream interval-joined to a
+    click stream (``how`` join, click_ts in [imp_ts, imp_ts + 5 min],
+    10-minute watermarks on both sides).
 
     Schedule (epoch offsets, delay = 10 min, interval [0s, 300s]):
       L b0: a@0(id1) b@60(id2) c@120(id3) e@100(id4); b1: zl@4000(id9)
@@ -5917,16 +5638,15 @@ def _sj_interval_streams(spark, sf_dir, prefix):
       R b2: zr2@4100(id12); b3: c@200(id8 — LATE: watermark 3500 by
             now, and c's left state evicted once wm > 120+300)
     Fences ride TWO batches per side (zl/zl2, zr/zr2) so one- vs
-    two-batch watermark-commit lag cannot change any outcome (the
-    q_dw1 double-fence recipe); either lag leaves the final committed
-    watermark ≥ 3400, far past every data row's eviction bound and far
-    short of the fences' own (4300/4400).
-
-    Returns (left_stream, right_stream, tmpdir)."""
+    two-batch watermark-commit lag cannot change any outcome; either
+    lag leaves the final committed watermark ≥ 3400, far past every
+    data row's eviction bound and far short of the fences' own
+    (4300/4400)."""
     import os
-    import tempfile
 
-    t0_epoch = 1_700_000_000
+    from electrician_spark.streaming import joins as sjoins
+    from electrician_spark.streaming.sources import arrival_waves
+
     ev = _t(spark, sf_dir, "events").filter(
         (F.col("event_id") >= 1) & (F.col("event_id") <= 12)
     )
@@ -5945,60 +5665,58 @@ def _sj_interval_streams(spark, sf_dir, prefix):
         5: 100, 6: 300, 7: 1000, 8: 200,      # clicks
         9: 4000, 10: 4100, 11: 4000, 12: 4100,  # fences
     }
-    ts = F.lit(t0_epoch).cast("long")
-    for i, o in off.items():
-        ts = ts + F.when(F.col("event_id") == i, o).otherwise(0)
     rows = ev.select(
         key.alias("key"),
-        ts.cast("double").alias("ts_epoch"),
+        _epoch_ts(1_700_000_000, off).cast("double").alias("ts_epoch"),
         F.col("event_id"),
         F.col("event_type").alias("etype"),
     )
-    tmp = tempfile.mkdtemp(prefix=prefix)
-    lsrc = os.path.join(tmp, "imp")
-    rsrc = os.path.join(tmp, "clk")
-    os.makedirs(lsrc)
-    os.makedirs(rsrc)
-    l_waves = [(1, 2, 3, 4), (9,), (10,)]
-    r_waves = [(5, 7), (6, 11), (12,), (8,)]
-    pdf = rows.toPandas()  # bounded: 12 rows, fixture writer
-    for src, waves in ((lsrc, l_waves), (rsrc, r_waves)):
-        for b, ids in enumerate(waves):
-            path = os.path.join(src, f"b{b}.json")
-            pdf[pdf.event_id.isin(ids)].to_json(
-                path, orient="records", lines=True
-            )
-    base = os.path.getmtime(path)
-    for src, waves in ((lsrc, l_waves), (rsrc, r_waves)):
-        for b in range(len(waves)):
-            p = os.path.join(src, f"b{b}.json")
-            os.utime(p, (base - 100 + b, base - 100 + b))
 
-    def _stream(src, idc, tc, tsc):
-        return (
-            spark.readStream.schema(
-                "key string, ts_epoch double, event_id long, etype string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .json(src)
-            .select(
-                "key",
-                F.col("event_id").alias(idc),
-                F.col("etype").alias(tc),
-                F.col("ts_epoch").cast("timestamp").alias(tsc),
-            )
+    def side(src, waves, idc, tc, tsc):
+        return arrival_waves(
+            spark, src, [rows.filter(F.col("event_id").isin(*ids)) for ids in waves]
+        ).select(
+            "key",
+            F.col("event_id").alias(idc),
+            F.col("etype").alias(tc),
+            F.col("ts_epoch").cast("timestamp").alias(tsc),
         )
 
-    left = _stream(lsrc, "l_id", "imp_type", "l_ts")
-    right = _stream(rsrc, "r_id", "click_type", "r_ts")
-    return left, right, tmp
+    def build(src):
+        left = side(
+            os.path.join(src, "imp"), [(1, 2, 3, 4), (9,), (10,)], "l_id", "imp_type", "l_ts"
+        )
+        right = side(
+            os.path.join(src, "clk"), [(5, 7), (6, 11), (12,), (8,)], "r_id", "click_type", "r_ts"
+        )
+        return sjoins.interval_join(
+            left,
+            right,
+            keys=["key"],
+            left_ts="l_ts",
+            right_ts="r_ts",
+            lower="0 seconds",
+            upper="5 minutes",
+            left_delay="10 minutes",
+            right_delay="10 minutes",
+            how=how,
+        ).select(
+            "key",
+            "l_id",
+            "r_id",
+            "imp_type",
+            "click_type",
+            (F.col("r_ts").cast("long") - F.col("l_ts").cast("long")).alias("dt_sec"),
+        )
+
+    return _memory_run(spark, prefix, build).orderBy("key")
 
 
 @query(
     "q_sj1_stream_stream_interval",
     # STREAM-STREAM INTERVAL JOIN with watermark state eviction —
-    # impression→click attribution on TWO real file streams (four
-    # mtime-ordered micro-batches each side), inner join on key with
+    # impression→click attribution on TWO real file streams (three and
+    # four arrival waves), inner join on key with
     # click_ts in [imp_ts, imp_ts + 5 min], 10-minute watermarks both
     # sides. Attested at once: (a) SAME-BATCH match (key a: imp and
     # click in batch 0, dt=100s); (b) CROSS-BATCH match through
@@ -6021,43 +5739,9 @@ def _sj_interval_streams(spark, sf_dir, prefix):
     tags=("streaming", "join"),
 )
 def q_sj1(spark, sf_dir):
-    # streaming/joins.interval_join (inner) over the shared two-stream
-    # fixture — see _sj_interval_streams for the schedule.
-    import os
-
-    from electrician_spark.streaming import joins as sjoins
-
-    left, right, tmp = _sj_interval_streams(spark, sf_dir, "q_sj1_")
-    joined = sjoins.interval_join(
-        left,
-        right,
-        keys=["key"],
-        left_ts="l_ts",
-        right_ts="r_ts",
-        lower="0 seconds",
-        upper="5 minutes",
-        left_delay="10 minutes",
-        right_delay="10 minutes",
-    ).select(
-        "key",
-        "l_id",
-        "r_id",
-        "imp_type",
-        "click_type",
-        (F.col("r_ts").cast("long") - F.col("l_ts").cast("long")).alias("dt_sec"),
-    )
-    name = "q_sj1_sink_" + os.path.basename(tmp).replace("q_sj1_", "")
-    with _state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q, 300)
-    return spark.table(name).orderBy("key")
+    # streaming/joins.interval_join (inner) — see _sj_interval_join for
+    # the schedule.
+    return _sj_interval_join(spark, sf_dir, "q_sj1_", "inner")
 
 
 @query(
@@ -6090,41 +5774,6 @@ def q_sj1(spark, sf_dir):
     tags=("streaming", "join"),
 )
 def q_sj2(spark, sf_dir):
-    # streaming/joins.interval_join (left outer) over the shared
-    # two-stream fixture — see _sj_interval_streams for the schedule.
-    import os
-
-    from electrician_spark.streaming import joins as sjoins
-
-    left, right, tmp = _sj_interval_streams(spark, sf_dir, "q_sj2_")
-    joined = sjoins.interval_join(
-        left,
-        right,
-        keys=["key"],
-        left_ts="l_ts",
-        right_ts="r_ts",
-        lower="0 seconds",
-        upper="5 minutes",
-        left_delay="10 minutes",
-        right_delay="10 minutes",
-        how="left",
-    ).select(
-        "key",
-        "l_id",
-        "r_id",
-        "imp_type",
-        "click_type",
-        (F.col("r_ts").cast("long") - F.col("l_ts").cast("long")).alias("dt_sec"),
-    )
-    name = "q_sj2_sink_" + os.path.basename(tmp).replace("q_sj2_", "")
-    with _state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_stream(q, 300)
-    return spark.table(name).orderBy("key")
+    # streaming/joins.interval_join (left outer) — see _sj_interval_join
+    # for the schedule.
+    return _sj_interval_join(spark, sf_dir, "q_sj2_", "left")

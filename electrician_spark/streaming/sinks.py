@@ -20,6 +20,7 @@ the per-batch work itself stays in the JVM.
 from __future__ import annotations
 
 import datetime as dt
+import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -30,22 +31,40 @@ from electrician_spark.reliability import CircuitBreaker, CircuitOpenError
 Sink = Callable[[DataFrame, int], None]
 
 
-def await_stream(query, timeout_sec: int = 300) -> None:
-    """Block until a triggered (availableNow) stream finishes; raise
-    instead of returning with a partial sink. ``awaitTermination``
-    returns False on timeout with the query STILL RUNNING and
-    ``exception()`` None — a caller that ignores the return value then
-    reads a partially-filled memory sink as if it were complete, with
-    no error anywhere. One helper so every sink site gets the same
-    contract: query failure re-raises, timeout stops the query and
-    raises TimeoutError."""
-    done = query.awaitTermination(timeout_sec)
+def await_stream(
+    query, timeout_sec: float = 300, done: Callable[[], bool] | None = None
+) -> None:
+    """Block until a bounded stream is complete; raise instead of
+    returning with a partial sink. ``awaitTermination`` returns False on
+    timeout with the query STILL RUNNING and ``exception()`` None — a
+    caller that ignores the return value then reads a partially-filled
+    sink as if it were complete, with no error anywhere.
+
+    With ``done=None`` the stream is complete when it terminates (an
+    availableNow trigger). A stream that never terminates by itself (a
+    processing-time trigger keeps polling) passes ``done``, a sink-side
+    predicate such as "the sink holds every row the source was given"
+    (electrician's processed == total rule, A5): it is polled every
+    quarter second, and once it holds the query is stopped.
+
+    Either way a query failure re-raises, and a stream not complete
+    after ``timeout_sec`` is stopped and raises TimeoutError."""
+    if done is None:
+        finished = query.awaitTermination(timeout_sec)
+    else:
+        deadline = time.monotonic() + timeout_sec
+        while not (finished := done()) and time.monotonic() < deadline:
+            if query.awaitTermination(0.25):
+                finished = done()
+                break
+        if finished:
+            query.stop()
     if query.exception() is not None:
         raise query.exception()
-    if not done:
+    if not finished:
         query.stop()
         raise TimeoutError(
-            f"streaming query {query.name or query.id} still running after "
+            f"streaming query {query.name or query.id} did not complete within "
             f"{timeout_sec}s — sink contents would be partial"
         )
 

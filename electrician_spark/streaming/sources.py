@@ -20,6 +20,8 @@ the test environment, so tests cover option-building only.
 from __future__ import annotations
 
 import json
+import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,6 +62,29 @@ def file_stream(
         if isinstance(f.dataType, TimestampNTZType):
             df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
+
+
+def arrival_waves(spark: SparkSession, src_dir: str, waves: list[DataFrame]) -> DataFrame:
+    """Replay ``waves`` as a file stream that reads one wave per
+    micro-batch, in list order.
+
+    Wave i is written to ``src_dir/w{i:04d}.json`` as NDJSON (each wave
+    is collected to the driver: bounded fixture data only) with its
+    mtime pinned to t0 + i seconds. The file source orders new files by
+    mtime, so with ``maxFilesPerTrigger=1`` micro-batch i is wave i
+    whatever the file system's timestamp resolution. The stream reads
+    with the first wave's schema."""
+    os.makedirs(src_dir, exist_ok=True)
+    t0 = time.time() - len(waves)
+    for i, wave in enumerate(waves):
+        path = os.path.join(src_dir, f"w{i:04d}.json")
+        wave.toPandas().to_json(path, orient="records", lines=True)
+        os.utime(path, (t0 + i, t0 + i))
+    return (
+        spark.readStream.schema(waves[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(src_dir)
+    )
 
 
 def kafka_source_options(

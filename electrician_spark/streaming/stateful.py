@@ -25,7 +25,7 @@ production deployment adds a state TTL via GroupStateTimeout.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -118,37 +118,6 @@ def resequence(
     return grouped_or_df.groupBy(key_col).applyInPandasWithState(
         fn, RESEQ_OUTPUT, _RESEQ_STATE, "append", timeout
     )
-
-
-def drain_timeout_query(
-    query, done: "Callable[[], bool]", timeout_sec: float = 300.0,
-    poll_sec: float = 2.0,
-) -> None:
-    """Wait for an availableNow stream that uses ProcessingTimeTimeout,
-    then stop it. Such queries never reach the terminated state on
-    their own (observed on Spark 4.1: after the last data batch the
-    query stays active servicing future processing-time timers, so
-    ``awaitTermination`` burns its full timeout), so completion has to
-    be observed from the SINK: poll ``done()`` — typically "the sink
-    holds the expected row count" — and stop() once it holds. If the
-    condition never holds (e.g. an eviction flush that should have
-    fired didn't), the query is stopped at ``timeout_sec`` and the
-    caller sees the short output; never raise here so the caller's
-    comparison surfaces the miss as a value diff, not a timeout."""
-    import time as _time
-
-    deadline = _time.monotonic() + timeout_sec
-    while _time.monotonic() < deadline:
-        if query.awaitTermination(poll_sec):
-            break
-        if query.exception() is not None:
-            raise query.exception()
-        if done():
-            break
-    query.stop()
-    query.awaitTermination(60)
-    if query.exception() is not None:
-        raise query.exception()
 
 
 RATE_OUTPUT = StructType(

@@ -7,6 +7,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from electrician_spark.operators import incremental
+from electrician_spark.streaming.sinks import await_stream
 
 K, BANDS, N = 16, 4, 3
 
@@ -168,8 +169,7 @@ def test_streaming_incremental_dedup_across_microbatches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
-    assert q.exception() is None, q.exception()
+    await_stream(q, 180)
 
     got = sorted(admitted_rows)
     # 1 and 2 admitted from batch one; 3 is a cross-batch dup; 4 wins

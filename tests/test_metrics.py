@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from electrician_spark.metrics import Meter
+from electrician_spark.streaming.sinks import await_stream
 
 
 def test_meter_counts_and_error_pct(spark):
@@ -49,7 +50,7 @@ def test_meter_listener_accumulates_progress(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(60)
+        await_stream(q, 60)
         # listener events are delivered asynchronously
         for _ in range(50):
             r = listener.readings.get(str(q.id))

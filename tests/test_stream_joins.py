@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from electrician_spark.streaming import joins as sjoins
+from electrician_spark.streaming.sinks import await_stream
 
 
 def _write_waves(dirpath, waves):
@@ -43,9 +44,7 @@ def _run_available_now(df, name, ckpt):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    if q.exception() is not None:
-        raise q.exception()
+    await_stream(q, 120)
     return q
 
 
@@ -77,9 +76,7 @@ def test_stream_static_broadcast_on_every_micro_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    if q.exception() is not None:
-        raise q.exception()
+    await_stream(q, 120)
     # three micro-batches ran (one file each), 4 rows delivered
     batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(batches) == 3, [p["batchId"] for p in q.recentProgress]
@@ -254,9 +251,7 @@ def test_stream_enriched_with_jdbc_dim(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    if q.exception() is not None:
-        raise q.exception()
+    await_stream(q, 120)
     got = {(r["cust_id"], r["amt"], r["name"]) for r in spark.table("ssj_jdbc").collect()}
     assert got == {
         (1, 10.0, "acme"), (2, 20.0, "globex"), (3, 30.0, "initech"), (1, 40.0, "acme")
@@ -301,9 +296,7 @@ def test_interval_join_state_survives_checkpoint_restart(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        if q.exception() is not None:
-            raise q.exception()
+        await_stream(q, 120)
 
     _run()  # run 1: impression buffered into state, no click yet
     assert spark.read.schema("key string, l_id long, r_id long").parquet(

@@ -15,6 +15,7 @@ from electrician_spark.reliability import CircuitBreaker
 from electrician_spark.streaming.sinks import (
     Blackout,
     ForEachBatchRouter,
+    await_stream,
     memory_sink,
     outside_blackout,
 )
@@ -41,7 +42,7 @@ def _run_available_now(stream_df, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return q
 
 
@@ -277,7 +278,7 @@ def test_checkpoint_restart_processes_each_file_exactly_once(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        await_stream(q, 120)
 
     run_once()
     first = spark.read.parquet(out).count()
