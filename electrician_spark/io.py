@@ -93,6 +93,17 @@ def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: str | Struct
     return spark.createDataFrame(table, schema=struct)
 
 
+def size_estimate(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes: the statistic
+    Catalyst's autoBroadcastJoinThreshold consults (file sizes for
+    scans, propagated through projections). No job runs. ``None`` where
+    the private plan handle is missing (Spark Connect) or has moved."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — private API unavailable
+        return None
+
+
 def fan_out_small(
     df: DataFrame, target: int | None = None, min_bytes: int | None = None
 ) -> DataFrame:
@@ -123,12 +134,9 @@ def fan_out_small(
         sc = df.sparkSession.sparkContext
         t = target or sc.defaultParallelism
         if min_bytes is not None:
-            try:
-                est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-                if est < min_bytes:
-                    return df
-            except Exception:  # noqa: BLE001 — estimate unavailable: fan out
-                pass
+            est = size_estimate(df)  # None: estimate unavailable, fan out
+            if est is not None and est < min_bytes:
+                return df
         try:
             # partition count straight off the JVM Dataset's RDD: the
             # public df.rdd property additionally plans the

@@ -38,8 +38,8 @@ Spark-first design (one shuffle pair per iteration, nothing else):
   regardless, and materializing then makes each round's work exactly
   one join+agg over cached inputs; an unmaterialized chain would
   re-derive all previous rounds per action (O(k²) recompute — caught
-  and pinned by tools/pagerank_probe.py, which measured a 7× blow-up
-  at 16× nodes before the fix). Production swaps localCheckpoint for
+  and pinned by ``git show 2aba643:tools/pagerank_probe.py``, which
+  measured a 7× blow-up at 16× nodes before the fix). Production swaps localCheckpoint for
   ``checkpoint`` on a cluster-visible directory (executor loss
   safety); localCheckpoint keeps the local[32] tests hermetic.
 
@@ -142,9 +142,10 @@ def pagerank(
         # unmaterialized chain would make later rounds re-derive all
         # previous rounds — O(k²) recompute that the 16× scaling probe
         # measured as a 7× blow-up before this pin
-        # (tools/pagerank_probe.py). Lazy keeps the truncation while
-        # deferring materialization to the terminal action, where each
-        # round's blocks are computed once and reused by round k+1.
+        # (`git show 2aba643:tools/pagerank_probe.py`). Lazy keeps the
+        # truncation while deferring materialization to the terminal
+        # action, where each round's blocks are computed once and reused
+        # by round k+1.
         ranks = (
             nodes.join(contrib, "node", "left")
             .join(F.broadcast(d_mass), F.lit(1) == F.lit(1))

@@ -828,8 +828,9 @@ def hamming_topk_ivf(
     )
 
 
-# Measured on the query-count axis (tools/r9_scale_probe.py, fixed
-# 16k-vector corpus, SCALE.md r9 table): brute hamming_topk grows
+# Measured on the query-count axis (`git show
+# 2aba643:tools/r9_scale_probe.py`, fixed 16k-vector corpus, SCALE.md
+# r9 table): brute hamming_topk grows
 # near-linearly in |Q| (exponent 0.83; 7.3 s at Q=10 → 226 s at
 # Q=640) while the cell-routed form stays sublinear (0.41; 3.4 s →
 # 19 s) because each query scores only nprobe/cells of the corpus.

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from electrician_spark.io import size_estimate
+
 
 def with_salt(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataFrame:
     """Per-row salt that spreads even byte-identical duplicate rows.
@@ -114,8 +116,9 @@ def broadcast_if_small(df: DataFrame, max_bytes: int = 64 << 20) -> DataFrame:
     estimate is the same statistic Catalyst's autoBroadcastJoinThreshold
     consults (file sizes for scans, propagated through projections), so
     this differs from relying on Catalyst only in applying a *caller's*
-    budget — e.g. hinting a dimension Catalyst under-estimates."""
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size <= max_bytes:
+    budget — e.g. hinting a dimension Catalyst under-estimates. Without
+    an estimate ``df`` is returned unhinted."""
+    size = size_estimate(df)
+    if size is not None and size <= max_bytes:
         return F.broadcast(df)
     return df

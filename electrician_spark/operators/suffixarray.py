@@ -382,9 +382,9 @@ def _global_dense_rank(
 #
 # Bound history: r12 set 1M from a pre-level-0-vocab A/B. The r15
 # level-0 change cut the compact side's cost profile, and the r16
-# refresh (tools/r16_sx_regime_ab.py, interleaved, outputs identical)
-# reads compact/distributed = 3.54/8.30 s at 270k positions,
-# 10.4/14.8 s at 1.28M, 38.7/58.7 s at 5.1M — compact wins every
+# refresh (`git show 2aba643:tools/r16_sx_regime_ab.py`, interleaved,
+# outputs identical) reads compact/distributed = 3.54/8.30 s at 270k
+# positions, 10.4/14.8 s at 1.28M, 38.7/58.7 s at 5.1M — compact wins every
 # tested point, so the gate moves to 4M (the largest bound with a
 # measured compact win ABOVE it). The single-task sort at the bound is
 # 4M rows x ~5 longs ~ 160 MB — still a bounded task; past it the

@@ -104,6 +104,19 @@ def _epoch_ts(t0_epoch: int, off: dict[int, int]):
     return ts
 
 
+def _round_trip(save: Callable[[str], None], load: Callable[[str], object], name: str):
+    """Write an artifact with ``save(path)`` into a temp dir, read it
+    back with ``load(path)`` and delete the dir. The loaded model is a
+    driver-side Python object, so nothing reads the file afterwards."""
+    import os
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as tmp:
+        path = os.path.join(tmp, name)
+        save(path)
+        return load(path)
+
+
 def _memory_run(
     spark: SparkSession,
     prefix: str,
@@ -1003,17 +1016,14 @@ def q_li1(spark, sf_dir):
     # collect (<= 300 x n_langs rows by construction), broadcast-join
     # scoring with one partial-aggregated shuffle and a bounded
     # (n_langs rows/doc) argmax window.
-    import os
-    import tempfile
-
     from electrician_spark.operators import langid
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     train = docs.filter(F.col("doc_id") % 5 != 0)
-    model = langid.train_langid(train, n=2, alpha=0.5, max_grams=300)
-    path = os.path.join(tempfile.mkdtemp(prefix="q_li1_"), "model.json")
-    langid.save_langid(model, path)
-    model = langid.load_langid(path)  # score from the ARTIFACT
+    trained = langid.train_langid(train, n=2, alpha=0.5, max_grams=300)
+    model = _round_trip(  # score from the ARTIFACT
+        lambda p: langid.save_langid(trained, p), langid.load_langid, "model.json"
+    )
     return _li1_score(spark, sf_dir, model)
 
 
@@ -1084,18 +1094,15 @@ def q_x9(spark, sf_dir):
     # posture instead — the SAME gate chain from a committed frozen
     # artifact, benchvariants.py — because train-once/reuse is the
     # documented contract; the correctness row keeps training live.)
-    import os
-    import tempfile
-
     from electrician_spark.operators import langid
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    model = langid.train_langid(
+    trained = langid.train_langid(
         docs.filter(F.col("doc_id") % 5 != 0), n=2, alpha=0.5, max_grams=300
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="q_x9_"), "model.json")
-    langid.save_langid(model, path)
-    model = langid.load_langid(path)  # gate from the ARTIFACT
+    model = _round_trip(  # gate from the ARTIFACT
+        lambda p: langid.save_langid(trained, p), langid.load_langid, "model.json"
+    )
     return _x9_gate(spark, sf_dir, model)
 
 
@@ -3261,7 +3268,7 @@ def q_pg1(spark, sf_dir):
     # operators/linkgraph.pagerank: one join+groupBy shuffle pair per
     # iteration, degree table joined once and localCheckpoint-ed,
     # per-round materialization pins constant-depth lineage (the
-    # measured O(k²) fix, tools/pagerank_probe.py).
+    # measured O(k²) fix, `git show 2aba643:tools/pagerank_probe.py`).
     from electrician_spark.operators import linkgraph as lg
 
     edges = (
@@ -3562,16 +3569,13 @@ def q_wp1(spark, sf_dir):
     # drift from the frozen oracle vocabulary breaks the row.
     # Reference: Schuster & Nakajima 2012 (WordPiece), the BERT
     # greedy longest-match + whole-word-[UNK] convention.
-    import os
-    import tempfile
-
     from electrician_spark.functions import tokenizer as tk
 
     mini = spark.createDataFrame([(t,) for t in _WP_MINI_CORPUS], "text string")
     vocab = tk.train_wordpiece_vocab(mini, vocab_size=70, min_count=1)
-    path = os.path.join(tempfile.mkdtemp(prefix="q_wp1_"), "wp.json")
-    tk.save_tokenizer(path, "wordpiece", vocab)
-    _kind, vocab2 = tk.load_tokenizer(path)
+    _kind, vocab2 = _round_trip(
+        lambda p: tk.save_tokenizer(p, "wordpiece", vocab), tk.load_tokenizer, "wp.json"
+    )
     return _wp1_encode(spark, sf_dir, vocab2)
 
 
@@ -4474,16 +4478,13 @@ def q_bp1(spark, sf_dir):
     # literal mini-corpus, save_tokenizer/load_tokenizer round-trip,
     # bpe_encode over the corpus (JVM pre-tokenization + Arrow-batched
     # merge loop with a per-batch word cache).
-    import os
-    import tempfile
-
     from electrician_spark.functions import tokenizer as tk
 
     mini = spark.createDataFrame([(t,) for t in _WP_MINI_CORPUS], "text string")
     merges = tk.train_bpe_merges(mini, num_merges=40, min_count=1)
-    path = os.path.join(tempfile.mkdtemp(prefix="q_bp1_"), "bpe.json")
-    tk.save_tokenizer(path, "bpe", merges)
-    _kind, merges2 = tk.load_tokenizer(path)
+    _kind, merges2 = _round_trip(
+        lambda p: tk.save_tokenizer(p, "bpe", merges), tk.load_tokenizer, "bpe.json"
+    )
     return _bp1_encode(spark, sf_dir, merges2)
 
 
@@ -4697,9 +4698,6 @@ def q_ug1(spark, sf_dir):
     # model table — equal to the DP's best score only if the encoder
     # returned the true argmax segmentation.
     # Reference: Kudo 2018 (SentencePiece unigram LM); SURVEY §2.13.
-    import os
-    import tempfile
-
     from electrician_spark.functions import tokenizer as tk
 
     mini = spark.createDataFrame([(t,) for t in _WP_MINI_CORPUS], "text string")
@@ -4707,9 +4705,9 @@ def q_ug1(spark, sf_dir):
         mini, vocab_size=60, max_piece_len=6, em_iters=2
     )
     qm = tk.quantize_logprobs(model, bits=20)
-    path = os.path.join(tempfile.mkdtemp(prefix="q_ug1_"), "unigram.json")
-    tk.save_tokenizer(path, "unigram", qm)
-    _kind, model2 = tk.load_tokenizer(path)
+    _kind, model2 = _round_trip(
+        lambda p: tk.save_tokenizer(p, "unigram", qm), tk.load_tokenizer, "unigram.json"
+    )
     return _ug1_encode(spark, sf_dir, model2)
 
 

@@ -103,47 +103,3 @@ def get_session(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def release_stranded_checkpoints(spark: SparkSession, gc_rounds: int = 2) -> int:
-    """END-OF-SESSION cleanup: unpersist every RDD still registered
-    after explicit GC, for use ONLY when no plan in this session will
-    ever be re-executed (bench.py calls it after its final series,
-    before results are read out and the process exits).
-
-    Why it exists: long busy py4j sessions can lose detach commands
-    (the JavaObject finalizer's `del` message is dropped if it races
-    an active gateway command), leaving the JVM gateway map holding a
-    Dataset — and through its plan, a checkpointed RDD — forever.
-    Observed r10: a full bench series strands 3-13 small RDDs
-    nondeterministically; the same queries drain to zero in short
-    sessions.
-
-    Why it is NOT a perpetual-driver (notebook / streaming) sweep:
-    ``persistentRdds`` is weak-valued, so anything still registered
-    after GC is STRONGLY reachable somewhere — possibly a DataFrame a
-    live notebook cell or streaming query still holds (py4j gateway
-    refs and CacheManager entries survive GC). localCheckpoint
-    TRUNCATES lineage, so sweeping a still-referenced checkpoint makes
-    the next action on that DataFrame fail with a missing-block error
-    instead of recomputing. A long-lived driver that needs cleanup
-    should unpersist the specific DataFrames it owns (or use precise
-    by-id release, as operators/suffixarray.py does for its
-    intermediate rounds) — never this registry-wide sweep. Returns
-    the number of RDDs released."""
-    import gc as _gc
-    import time as _time
-
-    sc = spark.sparkContext
-    for _ in range(gc_rounds):
-        _gc.collect()
-        sc._jvm.System.gc()
-        _time.sleep(1.5)
-        if sc._jsc.sc().getPersistentRDDs().size() == 0:
-            return 0
-    it = sc._jsc.sc().getPersistentRDDs().iterator()
-    ids = []
-    while it.hasNext():
-        ids.append(it.next()._1())
-    for rid in ids:
-        sc._jsc.sc().unpersistRDD(int(rid), False)
-    return len(ids)

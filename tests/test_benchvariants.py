@@ -5,15 +5,16 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 
 from pyspark.sql import functions as F
 
 from electrician_spark.benchvariants import ARTIFACT_DIR, BENCH_VARIANTS
 from electrician_spark.queries import REGISTRY
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
-def test_langid_artifact_matches_live_training(spark):
+def test_langid_artifact_matches_live_training(spark, tmp_path):
     from electrician_spark.io import read_table
     from electrician_spark.operators import langid
 
@@ -25,9 +26,7 @@ def test_langid_artifact_matches_live_training(spark):
     frozen = langid.load_langid(art)
     # save/load round-trip the LIVE model and compare serialized forms —
     # the canonical equality the loaders themselves define
-    import tempfile
-
-    p = os.path.join(tempfile.mkdtemp(), "m.json")
+    p = str(tmp_path / "m.json")
     langid.save_langid(live, p)
     assert json.load(open(p)) == json.load(open(art)), (
         "training code drifted from the committed artifact — re-run "
@@ -36,16 +35,14 @@ def test_langid_artifact_matches_live_training(spark):
     assert frozen is not None
 
 
-def test_unigram_artifact_matches_live_training(spark):
+def test_unigram_artifact_matches_live_training(spark, tmp_path):
     from electrician_spark.functions import tokenizer as tk
     from electrician_spark.queries import _WP_MINI_CORPUS
 
     mini = spark.createDataFrame([(t,) for t in _WP_MINI_CORPUS], "text string")
     model = tk.train_unigram_tokenizer(mini, vocab_size=60, max_piece_len=6, em_iters=2)
     qm = tk.quantize_logprobs(model, bits=20)
-    import tempfile
-
-    p = os.path.join(tempfile.mkdtemp(), "u.json")
+    p = str(tmp_path / "u.json")
     tk.save_tokenizer(p, "unigram", qm)
     art = os.path.join(ARTIFACT_DIR, "unigram_q_ug1.json")
     assert json.load(open(p)) == json.load(open(art)), (
@@ -54,20 +51,18 @@ def test_unigram_artifact_matches_live_training(spark):
     )
 
 
-def test_wordpiece_bpe_artifacts_match_live_training(spark):
+def test_wordpiece_bpe_artifacts_match_live_training(spark, tmp_path):
     from electrician_spark.functions import tokenizer as tk
     from electrician_spark.queries import _WP_MINI_CORPUS
 
     mini = spark.createDataFrame([(t,) for t in _WP_MINI_CORPUS], "text string")
-    import tempfile
-
     for kind, artifact, train in (
         ("wordpiece", "wordpiece_q_wp1.json",
          lambda: tk.train_wordpiece_vocab(mini, vocab_size=70, min_count=1)),
         ("bpe", "bpe_q_bp1.json",
          lambda: tk.train_bpe_merges(mini, num_merges=40, min_count=1)),
     ):
-        p = os.path.join(tempfile.mkdtemp(), "m.json")
+        p = str(tmp_path / f"{kind}.json")
         tk.save_tokenizer(p, kind, train())
         art = os.path.join(ARTIFACT_DIR, artifact)
         assert json.load(open(p)) == json.load(open(art)), (
@@ -111,3 +106,19 @@ def test_resolve_variant_none_when_artifact_missing(tmp_path, monkeypatch):
     monkeypatch.setattr(bv, "ARTIFACT_DIR", str(tmp_path))
     for name in bv.BENCH_VARIANTS:
         assert bv.resolve_variant(name, "/root/testdata/sf0.1") is None
+
+
+def test_artifact_rows_leave_no_temp_dir(spark, tmp_path, monkeypatch):
+    """The rows that round-trip a trained model through a file delete the
+    file's temp dir before they return: the loaded model lives in the
+    driver, so the result never reads the file."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in (
+        "q_li1_langid_model",
+        "q_x9_trained_gate_pipeline",
+        "q_wp1_wordpiece_encode",
+        "q_bp1_bpe_encode",
+        "q_ug1_unigram_viterbi_encode",
+    ):
+        REGISTRY[name].spark(spark, SF_SMOKE).count()
+        assert os.listdir(tmp_path) == [], name

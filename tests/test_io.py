@@ -131,6 +131,15 @@ def test_fan_out_small_widens_narrow_scan(spark):
     assert eio.fan_out_small(wide) is wide
 
 
+def test_size_estimate_reads_the_optimizer_statistic(spark):
+    """The estimate comes through a private plan path; a PySpark upgrade
+    that moves it must fail here, not turn the size gates silently off."""
+    scan = spark.read.parquet(os.path.join(SF_SMOKE, "lineitem.parquet"))
+    est = eio.size_estimate(scan)
+    assert isinstance(est, int) and est > 0
+    assert eio.size_estimate(object()) is None  # no plan handle
+
+
 def test_wave_file_roundtrip(spark, tmp_path):
     # File-format wave codec (reference codec/wave.go): executor-side
     # write -> binaryFile DSv2 scan -> Arrow-batched decode must

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from electrician_spark.operators import skew
 from electrician_spark.operators.skew import (
     broadcast_if_small,
     salted_agg,
@@ -135,6 +136,14 @@ def test_broadcast_gate_skips_large(spark):
     big = spark.range(1_000_000).selectExpr("id", "repeat('x', 100) AS pad")
     out = broadcast_if_small(big, max_bytes=1024)
     assert out is big  # no hint attached above the byte budget
+
+
+def test_broadcast_gate_passes_through_without_estimate(spark, monkeypatch):
+    # no optimizer estimate (Spark Connect, or a moved private API):
+    # no hint, and no error
+    monkeypatch.setattr(skew, "size_estimate", lambda df: None)
+    df = spark.range(10)
+    assert broadcast_if_small(df) is df
 
 
 # -- SQL generation for JDBC upsert sinks (appended here to avoid a

@@ -1,11 +1,9 @@
-"""The headline oracle gate as ONE reproducible command (r13 verdict
-item 5): same-session interleaved Spark/DuckDB A/B over the 12
-bench=True registry rows.
+"""The headline oracle gate as one reproducible command: a same-session
+interleaved Spark/DuckDB A/B over the 12 bench=True registry rows.
 
-Protocol (the exact recipe judges and builders have been re-implementing
-by hand from SCALE.md each round — ONLY a same-session interleaved read
-is valid for gate/weak-flag decisions, because both engines' ambient
-swings ~2-3x across sessions):
+Protocol (only a same-session interleaved read is valid for gate and
+weak-flag decisions, because both engines' ambient speed swings ~2-3x
+across sessions):
 - one Spark session (session factory, full cpu budget) + one DuckDB
   connection (threads = same budget) built up front;
 - per row: one untimed Spark warm-up (count) and one untimed DuckDB
@@ -16,21 +14,12 @@ swings ~2-3x across sessions):
 - gc.collect() between rows (the bench.py hygiene — drops dead plan
   refs so later rows don't measure a heap-pressured driver);
 - gate = sum(spark medians) / sum(duck mins) over all rows, plus
-  per-row ratios for weak-flag triage;
-- the output CARRIES ITS OWN AMBIENT ANCHOR: the bench cpu probe is
-  sampled before and after the series (min-of-2 each) and reported
-  next to its committed-nominal reference. A gate number whose probe
-  reads >=2x nominal was taken under host-level contention (measured
-  r14: a degraded hypervisor turned a 1.12x reading into 1.72x an hour
-  later with zero local load — Spark's 32-thread JVM absorbs host
-  contention much harder than DuckDB's short bursts, so the RATIO
-  moves with host state even interleaved) and is a host-state
-  measurement, not an engine one.
+  per-row ratios for weak-flag triage.
 
 Usage: python tools/oracle_gate.py                     # sf0.1 bench rows
        SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python tools/oracle_gate.py
        GATE_ROWS=q_d2_ngram_jaccard,q_d3_minhash_lsh python tools/oracle_gate.py
-Prints one JSON line; record the reading in SCALE.md round notes.
+Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -46,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
+from bench import HEADLINE, warm_python_workers  # noqa: E402
 from electrician_spark.queries import REGISTRY  # noqa: E402
 from electrician_spark.session import cpu_budget, get_session  # noqa: E402
 
@@ -64,33 +54,12 @@ def main() -> None:
         missing = [n for n in names if n not in REGISTRY]
         assert not missing, f"GATE_ROWS not in REGISTRY: {missing}"
     else:
-        names = [n for n, q in REGISTRY.items() if q.bench]
+        names = HEADLINE
     no_oracle = [n for n in names if REGISTRY[n].oracle is None]
     assert not no_oracle, f"gate rows need oracles: {no_oracle}"
 
     spark = get_session("electrician-spark-oracle-gate", cpus=cpu_budget())
-
-    def _warm(pdf):
-        import numpy  # noqa: F401
-
-        return pdf
-
-    spark.range(cpu_budget() * 4).repartition(cpu_budget()).groupBy("id").applyInPandas(
-        _warm, "id long"
-    ).count()
-
-    from pyspark.sql import functions as CF
-
-    def cpu_probe() -> float:
-        ts = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            spark.range(1_200_000_000).select(CF.max(CF.xxhash64("id"))).collect()
-            ts.append(time.perf_counter() - t0)
-        return round(min(ts), 4)
-
-    cpu_probe()  # codegen warm-up so the first recorded sample is steady
-    probe_before = cpu_probe()
+    warm_python_workers(spark)
 
     con = duckdb.connect()
     con.execute(f"SET threads={cpu_budget()}")
@@ -123,16 +92,6 @@ def main() -> None:
         }
         gc.collect()
 
-    probe_after = cpu_probe()
-    # the committed-nominal band for this probe on this machine
-    # (BENCH_DETAIL cpu_probe_samples across r13/r14: 0.19-0.37 s)
-    nominal = 0.25
-    # EITHER probe >= 2x nominal flags the reading: contention that
-    # starts or ends mid-series (the drift scenario this anchor exists
-    # for) contaminates the ratio even when the other probe is clean.
-    degraded_before = probe_before >= 2 * nominal
-    degraded_after = probe_after >= 2 * nominal
-    degraded = degraded_before or degraded_after
     s_total = sum(v["spark_sec"] for v in per_row.values())
     d_total = sum(v["duck_sec"] for v in per_row.values())
     print(
@@ -143,25 +102,12 @@ def main() -> None:
                 "spark_total_sec": round(s_total, 4),
                 "duck_total_sec": round(d_total, 4),
                 "rows": per_row,
-                "cpu_probe_before_sec": probe_before,
-                "cpu_probe_after_sec": probe_after,
-                "cpu_probe_nominal_sec": nominal,
-                "host_degraded": degraded,
-                "host_degraded_before": degraded_before,
-                "host_degraded_after": degraded_after,
                 "sf_dir": SF_DIR,
                 "pairs": PAIRS,
                 "cpus": cpu_budget(),
             }
         )
     )
-    if degraded:
-        print(
-            f"WARNING: cpu probe {probe_before}/{probe_after}s vs nominal "
-            f"~{nominal}s — host-level contention; this gate reading "
-            f"measures host state, not the engine (SCALE.md r14 note)",
-            file=sys.stderr,
-        )
 
 
 if __name__ == "__main__":

@@ -17,7 +17,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import EXTRA_QUERIES  # noqa: E402
+from bench import EXTRA_QUERIES, HEADLINE  # noqa: E402
 from electrician_spark.benchvariants import resolve_variant  # noqa: E402
 from electrician_spark.queries import REGISTRY  # noqa: E402
 from electrician_spark.session import cpu_budget, get_session  # noqa: E402
@@ -29,7 +29,7 @@ def main() -> int:
     if len(sys.argv) < 2:
         raise SystemExit(__doc__)
     out_dir = sys.argv[1]
-    names = sys.argv[2:] or ([n for n, q in REGISTRY.items() if q.bench] + EXTRA_QUERIES)
+    names = sys.argv[2:] or HEADLINE + EXTRA_QUERIES
     os.makedirs(out_dir, exist_ok=True)
     spark = get_session("plans", cpus=cpu_budget())
     failures = 0
